@@ -4,7 +4,8 @@
   workload) on /root/testdata/sf0.001.
 - ``queries()``: every implemented operator/query from SURVEY.md §2,
   keyed; each callable (spark, sf_dir) -> DataFrame.
-- ``oracle_sql()``: DuckDB-dialect equivalents for the hash-verified subset.
+- ``oracle_sql()``: DuckDB-dialect equivalents for every key in
+  ``queries()``; both emit keys in registration order.
 """
 
 from __future__ import annotations

@@ -603,8 +603,8 @@ def ntile_from_rank(rank: Column, n_total: int, k: int) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Incremental layout state (registry-unfreeze candidate family,
-# SURVEY.md §2.4): a GROWING table's NTILE/layout decisions should not
+# Incremental layout state (candidate family, SURVEY.md §2.4; library
+# only, no registry key): a GROWING table's NTILE/layout decisions should not
 # rescan history every batch.  The per-bucket count grid is the mergeable
 # sufficient statistic — counts sum across batches (offsets don't, so they
 # are derived from the merged grid at assignment time).  Store the grid as

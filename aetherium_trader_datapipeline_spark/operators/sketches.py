@@ -49,8 +49,8 @@ def hll_merge_estimate(
 # additionally supports INTERSECTION and A-NOT-B estimates on stored
 # sketches, never rescanning the base data ("how many users did A and B
 # share last quarter" from two metadata-sized rollup rows).  This is the
-# registry-unfreeze candidate family recorded in SURVEY.md §2.4; library +
-# tests land first (r12), keys when the freeze lifts.
+# candidate family recorded in SURVEY.md §2.4; it ships as a library with
+# tests and has no registry key.
 #
 # Representation (one row per group):
 #   theta_hashes array<bigint>  -- the retained distinct hashes, ASC-sorted

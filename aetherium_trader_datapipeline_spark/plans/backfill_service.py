@@ -41,7 +41,7 @@ from aetherium_trader_datapipeline_spark.plans.control_table import (
     StaleInstanceError,
     job_key,
 )
-from aetherium_trader_datapipeline_spark.streaming.ingest import ingest_batch
+from aetherium_trader_datapipeline_spark.streaming.ingest import LAKE_SCHEMA_DDL, ingest_batch
 
 
 @dataclass
@@ -66,7 +66,8 @@ def existing_dates(spark: SparkSession, data_dir: str, symbol: str) -> DataFrame
     fs, root = _hadoop_fs(spark, data_dir)
     if not fs.exists(root):
         return spark.createDataFrame([], "d DATE")
-    df = spark.read.parquet(data_dir)
+    # known schema: an existing but empty directory has none to infer
+    df = spark.read.schema(LAKE_SCHEMA_DDL).parquet(data_dir)
     return df.where(F.col("symbol") == symbol).select(F.col("date").alias("d")).distinct()
 
 

@@ -26,6 +26,7 @@ from aetherium_trader_datapipeline_spark.plans.control_table import (
     ControlTable,
     job_key,
 )
+from aetherium_trader_datapipeline_spark.streaming.ingest import LAKE_SCHEMA_DDL
 
 
 def bootstrap_control_table(
@@ -52,7 +53,9 @@ def bootstrap_control_table(
 
     fs, root = _hadoop_fs(spark, data_dir)
     if fs.exists(root):
-        ticks = spark.read.parquet(data_dir).where(F.col("symbol") == symbol)
+        # known schema: an existing but empty directory has none to infer
+        lake = spark.read.schema(LAKE_SCHEMA_DDL).parquet(data_dir)
+        ticks = lake.where(F.col("symbol") == symbol)
         per_day = (
             ticks.groupBy("date")
             .agg(F.max(F.unix_micros("timestamp")).alias("max_ts_us"))

@@ -19,6 +19,10 @@ docs/…系統設計文件.md:69-72; gap islands from domain/src/data_gap.rs:29-
 
 from __future__ import annotations
 
+import importlib
+import os
+import pkgutil
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -31,7 +35,7 @@ from aetherium_trader_datapipeline_spark.tables import load_tables
 class Query:
     key: str
     run: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # DuckDB SQL; None → driver does rows-only check
+    oracle: str  # DuckDB SQL the driver hash-checks the Spark result against
     headline: bool = False  # include in bench.py
     tags: tuple[str, ...] = field(default=())
 
@@ -39,11 +43,18 @@ class Query:
 REGISTRY: dict[str, Query] = {}
 
 
-def register(key: str, oracle: str | None, headline: bool = False, tags: tuple[str, ...] = ()):
+def _add(q: Query) -> None:
+    # a re-registered key would silently replace an oracle-verified query
+    if q.key in REGISTRY:
+        raise ValueError(f"registry key {q.key!r} is already registered")
+    REGISTRY[q.key] = q
+
+
+def register(key: str, oracle: str, headline: bool = False, tags: tuple[str, ...] = ()):
     """Decorator registering a (spark, sf_dir) -> DataFrame callable."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[key] = Query(key=key, run=fn, oracle=oracle, headline=headline, tags=tags)
+        _add(Query(key=key, run=fn, oracle=oracle, headline=headline, tags=tags))
         return fn
 
     return deco
@@ -62,9 +73,7 @@ def register_sql(
         load_tables(spark, sf_dir)
         return spark.sql(spark_sql)
 
-    REGISTRY[key] = Query(
-        key=key, run=run, oracle=duckdb_sql or spark_sql, headline=headline, tags=tags
-    )
+    _add(Query(key=key, run=run, oracle=duckdb_sql or spark_sql, headline=headline, tags=tags))
 
 
 # ---------------------------------------------------------------------------
@@ -752,473 +761,28 @@ register_sql(
 
 
 def _load_extensions() -> None:
-    # populates REGISTRY via its register()/register_sql() calls
-    import aetherium_trader_datapipeline_spark.queries_ext  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext2  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext3  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext4  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext5  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext6  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext7  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext8  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext9  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext10  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext11  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext12  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext13  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext14  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext15  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext16  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext17  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext18  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext19  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext20  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext21  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext22  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext23  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext24  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext25  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext26  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext27  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext28  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext29  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext30  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext31  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext32  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext33  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext34  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext35  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext36  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext37  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext38  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext39  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext40  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext41  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext42  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext43  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext44  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext45  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext46  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext47  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext48  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext49  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext50  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext51  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext52  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext53  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext54  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext55  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext56  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext57  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext58  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext59  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext60  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext61  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext62  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext63  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext64  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext65  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext66  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext67  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext68  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext69  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext70  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext71  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext72  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext73  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext74  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext75  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext76  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext77  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext78  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext79  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext80  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext81  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext82  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext83  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext84  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext85  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext86  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext87  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext88  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext89  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext90  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext91  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext92  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext93  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext94  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext95  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext96  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext97  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext98  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext99  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext100  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext101  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext102  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext103  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext104  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext105  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext106  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext107  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext108  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext109  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext110  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext111  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext112  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext113  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext114  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext115  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext116  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext117  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext118  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext119  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext120  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext121  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext122  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext123  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext124  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext125  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext126  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext127  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext128  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext129  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext130  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext131  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext132  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext133  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext134  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext135  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext136  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext137  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext138  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext139  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext140  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext141  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext142  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext143  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext144  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext145  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext146  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext147  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext148  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext149  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext150  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext151  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext152  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext153  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext154  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext155  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext156  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext157  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext158  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext159  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext160  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext161  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext162  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext163  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext164  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext165  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext166  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext167  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext168  # noqa: F401
-    import aetherium_trader_datapipeline_spark.queries_ext169  # noqa: F401
+    """Import every ``queries_ext*`` module; each registers its keys on import.
 
-
-# Keys that already have a green driver-verified row (rows+schema+hash) from a
-# prior round's CORRECTNESS_r*.json. The external harness hash-checks only the
-# FIRST 50 keys of queries()'s emission order, so we rotate: keys never yet
-# independently verified are emitted first, already-proven keys last. All keys
-# stay registered and locally oracle-gated (tests/test_queries_oracle.py) every
-# session regardless of emission order.
-_DRIVER_VERIFIED: frozenset[str] = frozenset(
-    {
-        # CORRECTNESS_r02.json — all 50 green.
-        "q01_scan_agg", "q02_filter_project", "q03_case_predicates", "q04_join_agg",
-        "q05_tpch_q3", "q06_left_join", "q07_semi_join", "q08_anti_join",
-        "q09_theta_join", "q10_asof_join", "q11_tpch_q1", "q12_distinct_agg",
-        "q13_rollup", "q14_having", "q15_rank_windows",
-        "q16_lag", "q17_rows_frame", "q18_analytic", "q19_topk_per_group",
-        "q20_sort_limit_offset",
-        # q13b_cube_gsets / q21_union / q22_intersect_except deliberately NOT
-        # listed: their r2 green rows were earned under pre-consolidation names
-        # (q13b_cube, q21b_union_all, q22_intersect, ...), so the current keys
-        # have no driver row — they lead the r5 window instead.
-        "q23_string_fns", "q24_date_fns", "q25_math_fns", "q26_array_fns",
-        "q26b_array_explode", "q27_map_fns", "q27b_map_keys", "q28_json_fns",
-        "q29_tumbling_window", "q30_sliding_window", "q31_session_window",
-        "q32_ohlcv", "q33_gap_detection", "q34_dedup_exact",
-        "q34b_dedup_events_minute", "q35_sim_topk_cosine", "q36_token_counts",
-        "q37_corr_subquery", "x40_udf_validate", "x41_grouped_demean",
-        "x42_language_id", "x43_quality_score", "x44_token_counts",
-        "x45_fingerprint", "x46_ngram_jaccard", "x49_embedding_neardup",
-        "x55_content_hash_dups",
-        # CORRECTNESS_r03.json — 49 green (the window's one red, x138, was
-        # fixed and re-verified green in r4).
-        "x135_decontaminate", "x136_repetition_filter", "x137_domain_mix",
-        "x139_kmeans_embeddings", "x129_minhash_portable",
-        "x130_simhash_portable", "x72_connected_components",
-        "x73_dup_clusters", "x77_ema", "x182_max_drawdown",
-        "x183_realized_vol", "x184_beta", "x185_lead_lag_corr",
-        "x186_bollinger", "x187_hll_portable", "x188_cms_topk",
-        "x189_triangle_census", "x190_neighbor_jaccard", "x191_semdedup",
-        "x192_knn_classify", "x193_scd2_history", "x194_cdc_snapshot",
-        "x195_bloom_prune", "x80_tpch_q5", "x81_tpch_q6", "x82_tpch_q4",
-        "x83_tpch_q10", "x84_tpch_q14", "x85_tpch_q18", "x86_tpch_q17",
-        "x87_tpch_q19", "x88_tpch_q22", "x89_tpch_q15", "x90_tpch_q7",
-        "x91_tpch_q13", "x92_tpch_q16", "x170_dup_span_removal",
-        "x167_containment", "x171_stateful_anomaly", "x172_pagerank",
-        "x173_audio_meta", "x174_python_udtf", "x178_bm25",
-        "x156_bigram_lm_score", "x157_dup_span_fraction", "x179_map_in_arrow",
-        "x180_pandas_iter_udf", "x168_dedup_keep_best", "x176_windowed_funnel",
-        # CORRECTNESS_r04.json — all 50 green (x138 was r3's red, re-verified).
-        "x138_sequence_packing", "x51_ratelimit_flags", "x52_backfill_plan",
-        "x56_udaf_sumsq", "x47_minhash_lsh_dedup", "x48_simhash_neardup",
-        "x50_ann_lsh_topk", "x63_stateful_ratelimit", "x53_approx_count_distinct",
-        "x54_percentile_approx", "x57_multimodal_meta", "x58_frame_sample",
-        "x59_stats_aggs", "x60_pivot", "x61_regex_fns", "x62_conditional_agg",
-        "x64_full_outer_join", "x65_exact_percentiles", "x66_edit_distance",
-        "x67_unpivot", "x68_epoch_fns", "x69_null_fns", "x70_string_agg",
-        "x71_ignore_nulls_window", "x74_ann_ivf_topk", "x75_bitwise",
-        "x76_date_arith", "x78_resample_ffill", "x79_twap",
-        "x93_higher_order_arrays", "x94_zip_with_dot",
-        "x95_json_struct_roundtrip", "x96_calendar_fns", "x97_histogram",
-        "x98_knn_query", "x99_normalize_quantize", "x100_deterministic_sample",
-        "x101_linreg", "x102_numeric_range_frame", "x103_median",
-        "x104_tpch_q2", "x105_tpch_q8", "x106_tpch_q9", "x107_tpch_q11",
-        "x108_tpch_q12", "x109_tpch_q20", "x110_tpch_q21", "x111_filter_agg",
-        "x112_lateral_topper", "x113_group_by_all",
-        # CORRECTNESS_r05.json — all 50 green (the 49 front keys + the one
-        # tier-0 fill, x114_recursive_cte).
-        "q13b_cube_gsets", "q21_union", "q22_intersect_except",
-        "x275_reservoir_sample", "x276_char_entropy", "x277_ngram_novelty",
-        "x278_embedding_quantize_int8", "x279_token_budget_histogram",
-        "x280_minhash_recall_curve", "x281_png_pixel_stats",
-        "x282_wav_waveform_stats", "x283_weighted_reservoir",
-        "x284_resample_linear", "x285_minhash_estimate",
-        "x286_partition_skew_report", "x287_zorder_keys",
-        "x288_portable_bloom", "x289_jpeg_pixel_stats", "x290_gif_pixel_stats",
-        "x291_winnowing_fingerprints", "x292_bpe_merge_rounds",
-        "x293_domain_cap", "x294_zone_map_prune", "x295_random_projection",
-        "x296_perplexity_buckets", "x297_label_propagation",
-        "x298_incremental_minhash", "x299_image_resize_box",
-        "x300_bpe_compression", "x301_join_size_estimate",
-        "x302_split_leakage", "x303_dataset_card", "x304_hilbert_vs_zorder",
-        "x305_rendezvous_shard", "x306_heaps_law",
-        "x307_exact_similarity_join", "x308_data_expectations",
-        "x309_poisson_bootstrap", "x310_pmi_topic_communities",
-        "x311_conformal_interval", "x312_k_anonymity", "x313_ranking_metrics",
-        "x314_volume_bars", "x315_tick_rule", "x316_kyle_lambda",
-        "x317_bar_return_moments", "x318_group_kfold",
-        "x319_regression_metrics", "x320_drift_psi", "x114_recursive_cte",
-        # CORRECTNESS_r06.json — all 50 green (absorbed at r7 round-open;
-        # list derived from the actual r6 row keys, not the rotation note).
-        "x115_posexplode", "x116_try_fns", "x117_bitmap_distinct",
-        "x118_inline_structs", "x119_variant_json", "x120_tfidf",
-        "x121_train_split", "x122_stratified_sample", "x123_union_by_name",
-        "x124_null_safe_join", "x125_regr_aggs",
-        "x126_percentile_within_group", "x127_width_bucket_bitaggs",
-        "x128_rth_local_window", "x150_minhash_pairs", "x131_sql_variables",
-        "x132_parameterized_sql", "x133_identifier_clause", "x134_vwap",
-        "x140_sql_pivot", "x141_gap_detection_sparse", "x142_multimodal_decode",
-        "x143_doc_chunking", "x144_pii_redact", "x146_word_entropy",
-        "x147_interval_join", "x148_asof_forward", "x149_asof_nearest",
-        "x151_fk_audit", "x152_column_profile", "x153_ohlcv_cascade",
-        "x154_bigram_pmi", "x155_arrow_udf", "x158_quality_model_score",
-        "x159_shard_assign", "x160_url_canonicalize", "x161_rolling_anomaly",
-        "x162_gram_matrix", "x163_event_funnel", "x164_retention_cohorts",
-        "x165_event_transitions", "x166_weighted_sample",
-        "x175_seasonal_profile", "x177_dau_wau", "x181_mrl_truncation",
-        "x196_holt_linear", "x197_ks_test", "x198_gini", "x199_phrase_search",
-        "x200_boolean_retrieval",
-        # CORRECTNESS_r07.json — 43 green (derived from the actual row keys).
-        # The window's 7 reds (x203, x204, x206, x239, x240, x242, x244 — the
-        # decimal-final-schema family) stay UNVERIFIED: they re-enter the r8
-        # window after the round-8 de-decimalization fix.
-        "x201_basket_pairs", "x202_session_paths", "x205_fuzzy_match",
-        "x207_image_ahash", "x208_rolling_regression", "x209_attribution",
-        "x210_rfm", "x211_log_histogram", "x212_kcore", "x213_avg_cost_pnl",
-        "x214_target_encoding", "x215_feature_lags", "x216_weighted_median",
-        "x217_cusum", "x218_ab_test", "x219_km_table", "x220_benford",
-        "x221_auc", "x222_calibration", "x223_confusion", "x224_scd2_pit",
-        "x225_revenue_share", "x226_new_vs_returning", "x227_rake_keywords",
-        "x228_lexical_diversity", "x229_hll_intersection",
-        "x230_bipartite_projection", "x231_cluster_cohesion",
-        "x232_order_disorder", "x233_lateness_quantiles", "x234_var_es",
-        "x235_flow_imbalance", "x236_business_days", "x237_hour_coverage",
-        "x238_pareto_8020", "x241_rank_fns", "x243_linear_attribution",
-        "x245_power_iteration", "x246_quantile_normalize",
-        "x247_seasonal_index", "x248_dup_rate_by_source", "x249_hhi",
-        "x250_ship_latency",
-        # CORRECTNESS_r08.json — all 50 green (derived from the actual row
-        # keys; zero reds).  Includes the 7 re-run decimal-final fixes (x203
-        # x204 x206 x239 x240 x242 x244) and 43 first-time keys.
-        "x203_incremental_agg", "x204_skyline", "x206_salted_agg",
-        "x239_band_join", "x240_time_rollup", "x242_snapshot_diff",
-        "x244_split_adjust", "x251_burstiness", "x252_set_jaccard_exact",
-        "x253_sql_udf", "x254_lateral_alias", "x255_decile_migration",
-        "x256_user_lifetime", "x257_revenue_bridge", "x258_abc_class",
-        "x259_growth_accounting", "x260_nrr", "x261_table_checksum",
-        "x262_bounce_rate", "x263_price_elasticity", "x264_promo_lift_did",
-        "x265_velocity_flags", "x266_share_trend", "x267_cohort_ltv",
-        "x268_welch_t", "x269_catalog_coverage", "x270_lines_histogram",
-        "x271_repurchase_interval", "x272_price_dispersion", "x273_zipf_fit",
-        "x274_interarrival_cv", "x321_amihud_illiquidity", "x322_roll_spread",
-        "x323_benford_digits", "x324_feature_hashing",
-        "x325_target_encoding_loo", "x326_mutual_information", "x327_acf",
-        "x328_variance_ratio", "x329_hurst_rs", "x330_l_diversity",
-        "x331_assortativity", "x332_systematic_sample", "x333_gini_stump",
-        "x334_chi2_tokens", "x335_corwin_schultz", "x336_vpin",
-        "x337_woe_iv", "x338_triple_barrier", "x339_pit_feature_join",
-        # CORRECTNESS_r09.json — all 50 green (derived from the actual row
-        # keys; zero reds).  The x340–x389 rotation window, exactly as the
-        # r9 pre-check replica predicted.
-        "x340_kl_source_divergence", "x341_hapax_concentration",
-        "x342_mad_outliers", "x343_winsorized_mean", "x344_theil_sen",
-        "x345_dow_seasonality", "x346_runs_test", "x347_hhi_concentration",
-        "x348_dedup_threshold_sweep", "x349_quality_funnel",
-        "x350_token_budget_fill", "x351_largest_remainder",
-        "x352_interval_union", "x353_skyline_2d", "x354_dataset_diff",
-        "x355_profile_drift", "x356_coverage_matrix", "x357_weighted_median",
-        "x358_ab_proportions", "x359_mase_forecast",
-        "x360_session_timeout_sweep", "x361_powerlaw_mle",
-        "x362_seasonal_anomaly", "x363_corr_matrix", "x364_portfolio_var",
-        "x365_dedup_survivorship", "x366_temperature_mixture",
-        "x367_epoch_allocation", "x368_context_fit", "x369_time_decay_score",
-        "x370_quantile_normalize", "x371_bot_screen", "x372_forward_asof",
-        "x373_overlap_pairs", "x374_kaplan_meier", "x375_longest_streaks",
-        "x376_pareto_concentration", "x377_seasonality_strength",
-        "x378_newey_west_se", "x379_overnight_intraday",
-        "x380_flat_run_staleness", "x381_vwap_slippage",
-        "x382_jpeg_color_pixel_stats", "x383_gif_interlaced_stats",
-        "x384_roll_spread", "x385_amihud_illiquidity",
-        "x386_semivariance_bipower", "x387_fk_readability",
-        "x388_mojibake_screen", "x389_lexical_diversity",
-        # CORRECTNESS_r10.json — all 50 green (derived from the actual row
-        # keys; zero reds).  The x390–x439 rotation window, exactly as the
-        # r10 full-tail pre-check replica predicted.
-        "x390_calibration_ece", "x391_woe_iv",
-        "x392_image_dhash", "x393_parkinson_vol",
-        "x394_garman_klass_vol", "x395_corwin_schultz",
-        "x396_effective_tick", "x397_association_rules",
-        "x398_compaction_plan", "x399_expected_shortfall",
-        "x400_drawdown_duration", "x401_implementation_shortfall",
-        "x402_participation_rate", "x403_order_size_distribution",
-        "x404_chunked_window_rv", "x405_jpeg_progressive_stats",
-        "x406_jpeg_420_pixel_stats", "x407_jpeg_progressive_color_stats",
-        "x408_jpeg_sa_progressive_stats", "x409_scaling_law_fit",
-        "x410_data_constrained_tokens", "x411_neyman_allocation",
-        "x412_ks_two_sample", "x413_mannwhitney_u",
-        "x414_chi2_independence", "x415_cuped_adjustment",
-        "x416_srm_check", "x417_event_study_car",
-        "x418_posting_delta_bits", "x419_encoding_size_estimate",
-        "x420_maxscore_prune", "x421_spearman_corr",
-        "x422_brier_decomposition", "x423_cohens_kappa",
-        "x424_adf_test", "x425_mean_reversion_halflife",
-        "x426_pairs_cointegration", "x427_modularity",
-        "x428_hits_scores", "x429_edge_cut_balance",
-        "x430_shapley_attribution", "x431_pinball_loss",
-        "x432_kendall_tau", "x433_hill_tail_index",
-        "x434_sortino_calmar", "x435_obv_adl",
-        "x436_tokenizer_fertility", "x437_shuffle_cost_model",
-        "x438_bloom_size_plan", "x439_mcv_stats",
-        "x440_functional_dependency", "x441_ab_power_plan",
-        "x442_vocab_coverage_curve", "x443_pairs_backtest",
-        "x444_embedding_isotropy", "x445_png_palette_stats",
-        "x446_png_interlaced_stats", "x447_rrf_fusion",
-        "x448_simpson_paradox", "x449_james_stein",
-        "x450_blocking_quality", "x451_bcubed_eval",
-        "x452_dp_noisy_counts", "x453_bh_fdr",
-        "x454_tost_equivalence", "x455_dirichlet_qlm",
-        "x456_stratified_att", "x457_propagator_decay",
-        "x458_purged_walkforward", "x459_hawkes_branching",
-        "x460_epps_effect", "x461_signature_plot",
-        "x462_almgren_chriss", "x463_kelly_fraction",
-        "x464_risk_parity", "x465_langid_confusion",
-        "x466_watermark_plan", "x467_backfill_eta",
-        "x468_black_scholes_greeks", "x469_harmonic_profile",
-        "x470_selectivity_error", "x471_char_bigram_entropy",
-        "x472_pca2d_closed_form", "x473_error_budget_burn",
-        "x474_mcnemar_paired", "x475_forecast_combination",
-        "x476_littles_law", "x477_granger_causality",
-        "x478_changepoint_binseg", "x479_pacf",
-        "x480_markov_attribution", "x481_holt_winters",
-        "x482_join_order_plan", "x483_audience_overlap",
-        "x484_croston", "x485_wilson_ci",
-        "x486_capture_recapture", "x487_ratio_metric_delta",
-        "x488_partition_granularity", "x489_topk_stability",
-        "x490_dkw_sample_size", "x491_sprt_sequential",
-        "x492_deflated_sharpe", "x493_information_coefficient",
-        "x494_reserve_price_sweep", "x495_newsvendor",
-        "x496_auc_delong", "x497_gumbel_block_maxima",
-        "x498_sortedness_profile", "x499_checkpoint_interval",
-        "x500_min_variance_pair", "x501_kalman_local_level",
-        "x502_garch_variance", "x503_ewma_correlation",
-        "x504_iv_regression", "x505_regression_discontinuity",
-        "x506_synthetic_control", "x507_backfill_priority",
-        "x508_ransac_line", "x509_lifecycle_tiering",
-        "x510_tail_dependence", "x511_capacity_estimate",
-        "x512_liquidity_stress", "x513_mix_waterfill",
-        "x514_lsh_param_plan", "x515_pipeline_order_audit",
-        "x516_weibull_reliability", "x517_mm1_wait_slo",
-        "x518_markov_entropy_rate", "x519_bass_diffusion",
-        "x520_retention_decay_fit", "x521_salt_plan",
-        "x522_bandit_replay", "x523_ips_policy_value",
-        "x524_offpolicy_support", "x525_consistent_hash_ring",
-        "x526_crdt_gcounter", "x527_staleness_exposure",
-        "x528_json_schema_infer", "x529_time_to_convert",
-        "x530_bag_set_ops", "x531_source_ablation",
-        "x532_ttl_cache_hits", "x533_erasure_blast_radius",
-        "x534_fleiss_kappa", "x535_two_way_anova",
-        "x536_levene_test", "x537_omega_ratio",
-        "x538_ulcer_index", "x539_capture_ratios",
-    }
-)
-
-
-def _emission_order() -> list[str]:
-    """Registry keys, never-driver-verified oracle keys first.
-
-    Within each tier, registration order is preserved.  Rows-only keys (no
-    oracle) sort after unverified oracle keys — a hash-window slot spent on a
-    rows-only check wastes the stronger verification.
+    Modules load in numeric-suffix order (bare ``queries_ext`` counts as 1),
+    so REGISTRY order, which is also the driver's emission order, does not
+    depend on directory listing order.
     """
-
-    # Round-14 absorption (executed at round-open): CORRECTNESS_r13.json
-    # came back 50/50 green (zero errs, zero hash mismatches) on the r13
-    # window x490–x539; all 50 are now in _DRIVER_VERIFIED above, derived
-    # from the artifact's actual row keys.  Cumulative driver-green is
-    # 539/575.  No reds, so no `front` list: the r14 window is the final
-    # never-verified tail in registration order (x540–x575, 36 keys) plus
-    # re-verifications of already-green keys to fill the 50-slot window —
-    # after this round every registry key has an official driver row.
-    #
-    # Compensating controls unchanged: the type-strict oracle gate
-    # (tests/test_queries_oracle.py, all keys every session), the
-    # full-tail replica prechecks (.data/), and the full-registry sweeps
-    # (SCALE.md).  KEEP ABSORBING AT ROUND-OPEN, EVERY ROUND — the r12
-    # skip cost a full rotation round.
-
-    def tier(k: str) -> int:
-        if k in _DRIVER_VERIFIED:
-            return 2
-        return 0 if REGISTRY[k].oracle is not None else 1
-
-    keys = list(REGISTRY)
-    return sorted(keys, key=lambda k: (tier(k), keys.index(k)))
+    found = (
+        re.fullmatch(r"queries_ext(\d*)", m.name)
+        for m in pkgutil.iter_modules([os.path.dirname(__file__)])
+    )
+    for _, name in sorted((int(m[1] or 1), m[0]) for m in found if m):
+        importlib.import_module(f"{__package__}.{name}")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     _load_extensions()
-    return {k: REGISTRY[k].run for k in _emission_order()}
+    return {k: q.run for k, q in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     _load_extensions()
-    return {
-        k: REGISTRY[k].oracle
-        for k in _emission_order()
-        if REGISTRY[k].oracle is not None
-    }
+    return {k: q.oracle for k, q in REGISTRY.items()}
 
 
 def headline_keys() -> list[str]:

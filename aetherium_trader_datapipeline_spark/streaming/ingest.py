@@ -17,9 +17,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from aetherium_trader_datapipeline_spark.operators.validate import tick_valid_expr
+from aetherium_trader_datapipeline_spark.operators.validate import (
+    TICK_SCHEMA_DDL,
+    tick_valid_expr,
+)
 
 FLUSH_INTERVAL_SECONDS = 5  # reference flush_interval (di.rs:41-42)
+
+# What the sinks below write: tick columns plus the date/hour layout
+# columns. Readers of the lake pass it instead of inferring it, so an
+# existing but empty lake directory reads as an empty frame rather than
+# failing with UNABLE_TO_INFER_SCHEMA.
+LAKE_SCHEMA_DDL = TICK_SCHEMA_DDL + ", date DATE, hour INT"
 
 
 def with_partition_cols(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:

@@ -7,6 +7,7 @@ against a temp store."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -82,3 +83,35 @@ def test_ingest_outage_gap_backfill_verify(spark):
     st = control.get(job_key("NQ", "2025-12-01"))
     assert st.status == "COMPLETED"
     assert st.cursor > 0
+
+
+def test_empty_lake_dir_reads_as_empty_lake(spark):
+    """A fresh `mkdir data` is an empty lake to gap detection, bootstrap and
+    backfill; reading it used to fail schema inference."""
+    from aetherium_trader_datapipeline_spark.operators.gaps import detect_gaps
+    from aetherium_trader_datapipeline_spark.plans.backfill_service import (
+        backfill_range,
+        existing_dates,
+    )
+    from aetherium_trader_datapipeline_spark.plans.bootstrap import bootstrap_control_table
+    from aetherium_trader_datapipeline_spark.plans.control_table import ControlTable
+    from aetherium_trader_datapipeline_spark.sources.ticks import historical_ticks
+
+    base = tempfile.mkdtemp(prefix="e2e-empty-")
+    data = f"{base}/data"
+    os.mkdir(data)
+    assert existing_dates(spark, data, "NQ").count() == 0
+    boot = bootstrap_control_table(
+        spark, data, ControlTable(f"{base}/boot"), "NQ", "2025-12-01", "2025-12-02"
+    )
+    assert [(str(g.gap_start), str(g.gap_end)) for g in boot.collect()] == [
+        ("2025-12-01", "2025-12-02")
+    ]
+
+    report = backfill_range(
+        spark, ControlTable(f"{base}/ctl"), historical_ticks, data, "NQ", "2025-12-01", "2025-12-02"
+    )
+    assert (report.days_processed, report.failed_days) == (2, [])
+    present = existing_dates(spark, data, "NQ")
+    assert sorted(str(r.d) for r in present.collect()) == ["2025-12-01", "2025-12-02"]
+    assert detect_gaps(present, "2025-12-01", "2025-12-02").count() == 0

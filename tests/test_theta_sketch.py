@@ -2,8 +2,8 @@
 lossless merge==direct property, estimator error bounds, and set
 operations pinned bit-for-bit against a pure-Python KMV reference.
 
-Registry-unfreeze candidate family (SURVEY.md §2.4) — library + tests
-land while the registry is frozen; keys follow when the freeze lifts.
+Candidate family from SURVEY.md §2.4; it ships as a library with these
+tests and has no registry key.
 """
 
 from __future__ import annotations
