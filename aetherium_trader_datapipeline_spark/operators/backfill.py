@@ -14,8 +14,6 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from aetherium_trader_datapipeline_spark.operators.gaps import detect_gaps
-
 
 def resume_start(range_start: dt.date, cursor_ms: int | None) -> dt.date:
     """Clip the range start to the day of the cursor HWM (reference
@@ -34,21 +32,19 @@ def plan_backfill_days(
     cursor_ms: int | None = None,
     date_col: str = "d",
 ) -> DataFrame:
-    """Sorted distinct days to process: {effective_start} ∪ gap days,
-    clipped to [effective_start, end]. Output: (d DATE)."""
+    """Sorted distinct days to process: {effective_start} ∪ days of
+    [effective_start, end] absent from ``present``. Output: (d DATE).
+
+    One aggregation folds the present dates inside the range into a set;
+    the spine minus that set is already sorted and starts after
+    effective_start, so prepending it keeps the order. A cursor past
+    ``end`` plans nothing (the reference's range is then empty)."""
     spark = present.sparkSession
-    start_d = dt.date.fromisoformat(start)
-    eff_start = resume_start(start_d, cursor_ms)
-    gaps = detect_gaps(present, str(eff_start), end, date_col=date_col)
-    gap_days = gaps.select(
-        F.explode(
-            F.sequence(F.col("gap_start"), F.col("gap_end"), F.expr("INTERVAL 1 DAY"))
-        ).alias("d")
-    )
-    seed = spark.range(1).select(F.lit(str(eff_start)).cast("date").alias("d"))
-    return (
-        seed.unionByName(gap_days)
-        .where(F.col("d").between(F.lit(str(eff_start)), F.lit(end)))
-        .distinct()
-        .orderBy("d")
-    )
+    eff_start = resume_start(dt.date.fromisoformat(start), cursor_ms)
+    if eff_start > dt.date.fromisoformat(end):
+        return spark.createDataFrame([], "d DATE")
+    lo, hi = F.lit(str(eff_start)).cast("date"), F.lit(end).cast("date")
+    d = F.col(date_col).cast("date")
+    have = present.where(d.between(lo, hi)).agg(F.collect_set(d).alias("have"))
+    missing = F.array_except(F.sequence(lo, hi, F.expr("INTERVAL 1 DAY")), F.col("have"))
+    return have.select(F.explode(F.array_union(F.array(lo), missing)).alias("d"))

@@ -1,4 +1,4 @@
-"""Backfill service (op P2) — control-table-driven day loop.
+"""Backfill service (op P2) — control-table-driven, one write per range.
 
 Reference: backfill_range (application/src/backfill_service.rs:143-225):
 initialize job (J1) → resume from cursor → detect gaps (G1) → plan days
@@ -6,28 +6,35 @@ initialize job (J1) → resume from cursor → detect gaps (G1) → plan days
 advance cursor; per-day failures collected, final status COMPLETED iff
 none failed.
 
-Spark shape: the *days* drive a driver-side loop (days are the work
-granularity, same as the reference); each day's fetch+persist is fully
-distributed. The cursor is a high-water mark persisted per completed day
-— a restart resumes from it, and per-day FAILURES are recorded as
+Spark shape: the reference walks the days one at a time; here the
+driver only calls ``fetch_day`` once per planned day (lazy plans), and
+the fetched days are persisted by ONE distributed write over their
+union — one Spark write job per backfill (one task per day with
+``historical_ticks``). The cursor is a high-water mark advanced to the
+write's observed max timestamp — a restart resumes from it — and
+FAILURES are recorded as
 ``critical_ranges`` on the job state (the reference's field of the same
 name) so a retry re-plans them even though they sit below the HWM: a
 cursor alone cannot distinguish "day done" from "a later day done" (an
 r10 review finding — a failed day behind a successful one was previously
-never re-planned and the job still read COMPLETED).
+never re-planned and the job still read COMPLETED). A day whose fetch
+raises fails alone; a failed write fails every day of the batch, since
+dynamic partition overwrite commits nothing when its job fails.
 
 Fencing: every control-table mutation is instance-fenced (Z1), and the
-loop re-fences via heartbeat immediately before the data-plane write so
-a zombie that stalled inside fetch_day cannot clobber a takeover's
-partitions with stale data after waking up. The residual window (fence
-check → write) is inherent to an unlocked data plane; the write itself
-is idempotent (dynamic overwrite of the same day from the same source).
+service re-fences via one heartbeat immediately before the one
+data-plane write, so a zombie that stalled inside fetch_day cannot
+clobber a takeover's partitions with stale data after waking up. The
+residual window (fence check → write) is inherent to an unlocked data
+plane; the write itself is idempotent (dynamic overwrite of the same
+days from the same source).
 """
 
 from __future__ import annotations
 
 import datetime as dt
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,10 +59,12 @@ class BackfillReport:
 
 
 def existing_dates(spark: SparkSession, data_dir: str, symbol: str) -> DataFrame:
-    """Op G2 — catalog probe. With the partitioned layout, partition
-    pruning reads only the symbol's directory listing; non-empty files are
-    guaranteed by the sink (empty-file case of detectors/gap.rs:60-83
-    cannot occur under Spark's task commit).
+    """Op G2 — catalog probe. Building the relation lists the whole
+    store (every symbol's partitions); partition pruning then filters
+    that listing to the symbol's partitions and reads only the partition
+    values, no data. Non-empty files are guaranteed by the sink
+    (empty-file case of detectors/gap.rs:60-83 cannot occur under Spark's
+    task commit).
 
     Existence is probed EXPLICITLY: a broad except here used to turn ANY
     read failure (transient FS error, one corrupt footer) into "empty
@@ -108,6 +117,18 @@ def backfill_range(
     plan = sorted(set(plan) | critical)
 
     report = BackfillReport()
+    last_err: str | None = None
+
+    def record_failure(days: list[str], err: Exception) -> None:
+        nonlocal last_err
+        last_err = type(err).__name__
+        for day in days:
+            report.failed_days.append(day)
+            control.add_critical_range(key, instance, day, day)
+        control.update_status(key, instance, st.status, error_type=last_err)
+
+    batch: list[str] = []
+    frames: list[DataFrame] = []
     for day in plan:
         end_of_day_ms = int(
             (dt.datetime.fromisoformat(day).replace(tzinfo=dt.timezone.utc)
@@ -116,34 +137,40 @@ def backfill_range(
         if end_of_day_ms <= st.cursor and day not in critical:
             continue  # already covered by the HWM (backfill_service.rs:179-181)
         try:
-            ticks = fetch_day(spark, symbol, day)
-            # fence IMMEDIATELY before the data-plane write (heartbeat is
-            # a fenced mutation): a zombie that stalled inside fetch_day
-            # past the takeover threshold dies here instead of
-            # overwriting the takeover's partitions with stale data
-            control.heartbeat(key, instance, now=now)
-            n, max_ts = ingest_batch(ticks, data_dir)
-            if max_ts is not None:
-                control.update_cursor(key, instance, max_ts // 1000)
-            if day in critical:
-                control.remove_critical_range(key, instance, day, day)
-            st = control.get(key)
-            report.days_processed += 1
-            report.total_ticks += n
+            frames.append(fetch_day(spark, symbol, day))
+            batch.append(day)
         except (StaleInstanceError, ControlTableCorruptError):
             # fencing/infrastructure errors are NOT per-day data failures:
-            # recording them re-enters the fenced path with the same stale
-            # id and aborts the loop mid-handler (r10 review finding) —
-            # propagate instead; a fenced-out zombie must write nothing
+            # recording them would re-enter the fenced path with the same
+            # stale id — propagate; a fenced-out zombie must write nothing
             raise
-        except Exception as e:  # per-day failures collected, not fatal
-            report.failed_days.append(day)
-            control.add_critical_range(key, instance, day, day)
-            control.update_status(key, instance, st.status, error_type=type(e).__name__)
+        except Exception as e:  # per-day fetch failures collected, not fatal
+            record_failure([day], e)
+
+    if frames:
+        # fence IMMEDIATELY before the data-plane write (heartbeat is a
+        # fenced mutation): a zombie that stalled inside fetch_day past
+        # the takeover threshold dies here instead of overwriting the
+        # takeover's partitions with stale data
+        control.heartbeat(key, instance, now=now)
+        try:
+            n, max_ts = ingest_batch(reduce(DataFrame.unionByName, frames), data_dir)
+        except Exception as e:
+            # dynamic overwrite commits nothing on job failure, so no day
+            # of the batch landed: all of them are re-planned on retry
+            record_failure(batch, e)
+        else:
+            if max_ts is not None:
+                control.update_cursor(key, instance, max_ts // 1000)
+            for day in batch:
+                if day in critical:
+                    control.remove_critical_range(key, instance, day, day)
+            report.days_processed = len(batch)
+            report.total_ticks = n
+    report.failed_days.sort()
+    # a FAILED final status keeps the last error type — update_status
+    # overwrites it, and a FAILED record with a null error type is
+    # useless to the operator triaging it
     final = COMPLETED if not report.failed_days else FAILED
-    # preserve the last per-day error type on a FAILED final status —
-    # update_status overwrites it, and a FAILED record with a null error
-    # type is useless to the operator triaging it
-    last_err = control.get(key).last_error_type if report.failed_days else None
     control.update_status(key, instance, final, error_type=last_err)
     return report

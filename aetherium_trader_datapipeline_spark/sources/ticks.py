@@ -14,7 +14,8 @@ Mirrors the reference's mock gateways deterministically:
   so tests can assert exactly.
 
 Generation is distributed: `sequence` + `explode` produces rows on
-executors; nothing materializes on the driver.
+executors; nothing materializes on the driver. The seed is one row in
+one partition (`_one_row`), so a fetched day is one task.
 """
 
 from __future__ import annotations
@@ -32,6 +33,15 @@ TICKS_PER_DAY = 1440
 
 class DataUnavailableError(Exception):
     """Requested date beyond the configured history depth (di.rs:53-58)."""
+
+
+def _one_row(spark: SparkSession) -> DataFrame:
+    """One row in one partition. ``spark.range(1)`` would add a task per
+    default-parallelism split, all but one empty. ``spark.range(0, 1, 1, 1)``
+    reports SinglePartition, and a union of such frames (a backfill's
+    write) collapses into one task under ``spark.sql.unionOutputPartitioning``;
+    a one-row relation keeps one task per day."""
+    return spark.sql("SELECT 1")
 
 
 def _tick_projection(ts_col, symbol: str):
@@ -64,7 +74,7 @@ def historical_ticks(
             f"{symbol} {d}: beyond {MAX_HISTORY_DAYS}-day history depth"
         )
     start = F.lit(f"{d} 00:00:00").cast("timestamp")
-    minutes = spark.range(1).select(
+    minutes = _one_row(spark).select(
         F.explode(
             F.sequence(start, start + F.expr("INTERVAL 23 HOURS 59 MINUTES"),
                        F.expr("INTERVAL 1 MINUTE"))
@@ -82,7 +92,7 @@ def historical_range(
     today = today or dt.datetime.now(dt.timezone.utc).date()
     if (today - d0).days > MAX_HISTORY_DAYS:
         raise DataUnavailableError(f"{symbol} {start}: beyond history depth")
-    days = spark.range(1).select(
+    days = _one_row(spark).select(
         F.explode(
             F.sequence(F.lit(start).cast("date"), F.lit(end).cast("date"),
                        F.expr("INTERVAL 1 DAY"))

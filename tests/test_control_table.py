@@ -167,6 +167,73 @@ def test_backfill_collects_failed_days(spark, tmp_path, control):
     assert control.get("ingest:job:NQ:2024-01-02").status == "FAILED"
 
 
+def test_backfill_end_before_cursor_day_plans_nothing(spark, tmp_path, control):
+    """Re-running a backfill whose end falls before the cursor's day used
+    to build a reversed date sequence, raise, and leave the job RUNNING —
+    every rerun then hit JobAlreadyRunningError until the heartbeat went
+    stale. The cursor already covers the range, so nothing is planned."""
+    import datetime as dt
+
+    from aetherium_trader_datapipeline_spark.plans.backfill_service import backfill_range
+    from aetherium_trader_datapipeline_spark.sources.ticks import historical_ticks
+
+    data_dir = str(tmp_path / "t")
+
+    def fetch(spark, symbol, day):
+        return historical_ticks(spark, symbol, day, today=dt.date(2024, 6, 1))
+
+    backfill_range(spark, control, fetch, data_dir, "NQ", "2024-01-02", "2024-01-06")
+    for _ in range(2):  # the second rerun proves the job is not wedged
+        r = backfill_range(spark, control, fetch, data_dir, "NQ", "2024-01-02", "2024-01-03")
+        assert (r.days_processed, r.total_ticks, r.failed_days) == (0, 0, [])
+        assert control.get("ingest:job:NQ:2024-01-02").status == "COMPLETED"
+    assert spark.read.parquet(data_dir).count() == 5 * 1440
+
+
+def test_backfill_write_failure_fails_whole_batch(spark, tmp_path, control):
+    """The fetched days land in ONE dynamic-overwrite write. A day whose
+    frame fails only at execution fails that write, which commits
+    nothing: every day of the batch is recorded as failed and re-planned,
+    none of their partitions exist, and the cursor does not move."""
+    import datetime as dt
+    import os
+
+    from pyspark.sql import functions as F
+
+    from aetherium_trader_datapipeline_spark.plans.backfill_service import backfill_range
+    from aetherium_trader_datapipeline_spark.sources.ticks import historical_ticks
+
+    data_dir = str(tmp_path / "t")
+    key = "ingest:job:NQ:2024-01-02"
+    days = ["2024-01-02", "2024-01-03", "2024-01-04"]
+    calls = {"fail": True}
+
+    def fetch(spark, symbol, day):
+        t = historical_ticks(spark, symbol, day, today=dt.date(2024, 6, 1))
+        if day == "2024-01-03" and calls["fail"]:
+            return t.withColumn("symbol", F.raise_error(F.lit("feed corrupt")))
+        return t
+
+    r1 = backfill_range(spark, control, fetch, data_dir, "NQ", days[0], days[-1])
+    assert r1.failed_days == days
+    assert (r1.days_processed, r1.total_ticks) == (0, 0)
+    st = control.get(key)
+    assert st.status == "FAILED"
+    assert st.last_error_type is not None
+    assert sorted(r["start"] for r in st.critical_ranges) == days
+    assert st.cursor == DAY0 - 1  # unchanged from initialization
+    for day in days:
+        assert not os.path.exists(os.path.join(data_dir, "symbol=NQ", f"date={day}"))
+
+    calls["fail"] = False  # the feed recovers
+    r2 = backfill_range(spark, control, fetch, data_dir, "NQ", days[0], days[-1])
+    assert (r2.days_processed, r2.failed_days) == (3, [])
+    st = control.get(key)
+    assert st.status == "COMPLETED"
+    assert st.critical_ranges == []
+    assert spark.read.parquet(data_dir).count() == 3 * 1440
+
+
 def test_live_stream_zombie_writer_fenced(spark, tmp_path, control):
     """Two LIVE foreachBatch writers on one control-table key with a stale
     takeover mid-stream (reference state/redis.rs:198-230, IDD.md:215-219):

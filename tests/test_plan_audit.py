@@ -472,7 +472,8 @@ _CHUNK_GRID = ("prefix offsets over the <=1000-row value-range chunk grid "
 _GLOBAL_WINDOW_BOUNDS: dict[str, str] = {
     # --- generated-spine / day-grid operators ---
     "q33_gap_detection": "per-(symbol,day) presence grid vs a generated day spine; O(calendar days)",
-    "x52_backfill_plan": "backfill planner over the day spine; O(calendar days)",
+    # (x52_backfill_plan left this list: the planner is one collect_set
+    # aggregation plus an array difference, no window)
     "x141_gap_detection_sparse": "sparse-island day grid; O(calendar days)",
     # --- value-range chunked rewrites (r11) ---
     "x198_gini": _CHUNK_GRID,

@@ -78,6 +78,36 @@ def test_partition_pruning_on_tick_layout(spark, tmp_path):
     assert q.count() == 1440
 
 
+def test_backfill_range_is_one_write_of_one_task_per_day(spark, tmp_path, monkeypatch):
+    """A backfill persists its planned days in one ingest_batch write, and
+    a fetched day is one partition: a return to a write per day or to
+    empty default-parallelism tasks fails here."""
+    import datetime as dt
+
+    from aetherium_trader_datapipeline_spark.plans import backfill_service
+    from aetherium_trader_datapipeline_spark.plans.control_table import ControlTable
+    from aetherium_trader_datapipeline_spark.sources.ticks import historical_ticks
+
+    today = dt.date(2024, 6, 1)
+    assert historical_ticks(spark, "NQ", "2024-01-02", today=today).rdd.getNumPartitions() == 1
+
+    writes = []
+    real = backfill_service.ingest_batch
+
+    def counting(ticks, out_dir):
+        writes.append(ticks.rdd.getNumPartitions())
+        return real(ticks, out_dir)
+
+    monkeypatch.setattr(backfill_service, "ingest_batch", counting)
+    report = backfill_service.backfill_range(
+        spark, ControlTable(str(tmp_path / "ctl")),
+        lambda s, sym, d: historical_ticks(s, sym, d, today=today),
+        str(tmp_path / "store"), "NQ", "2024-01-02", "2024-01-04",
+    )
+    assert report.days_processed == 3
+    assert writes == [3]  # one write, one partition per day
+
+
 def test_asof_single_shuffle(spark, tables):
     """The as-of window formulation must shuffle once (one Exchange on
     user_id), never a nested-loop pair join."""

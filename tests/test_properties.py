@@ -56,6 +56,45 @@ def test_detect_gaps_matches_bruteforce(spark, present, span):
 
 
 @given(
+    present=st.sets(st.integers(min_value=-3, max_value=33), max_size=37),
+    span=st.integers(min_value=0, max_value=30),
+    cursor=st.one_of(
+        st.none(),
+        st.tuples(st.integers(min_value=-2, max_value=36), st.integers(0, 86_399_999)),
+    ),
+)
+@settings(**SETTINGS)
+def test_plan_backfill_days_matches_bruteforce(spark, present, span, cursor):
+    from aetherium_trader_datapipeline_spark.operators.backfill import plan_backfill_days
+
+    end = START + dt.timedelta(days=span)
+    have = {START + dt.timedelta(days=i) for i in present}
+    pdf = spark.createDataFrame([(d,) for d in sorted(have)] or [(None,)], "d DATE").where(
+        "d IS NOT NULL"
+    )
+    cursor_ms = None
+    if cursor is not None:
+        day, ms = cursor
+        midnight = dt.datetime.combine(START + dt.timedelta(days=day), dt.time(),
+                                       tzinfo=dt.timezone.utc)
+        cursor_ms = int(midnight.timestamp() * 1000) + ms
+    got = [r.d for r in plan_backfill_days(pdf, str(START), str(end), cursor_ms).collect()]
+
+    # brute force, plan_days_to_process (backfill_service.rs:296-317):
+    # resume from the cursor's day, then {effective_start} ∪ missing days
+    # of [effective_start, end], clipped, sorted, deduped
+    eff = START
+    if cursor_ms is not None:
+        eff = max(eff, dt.datetime.fromtimestamp(cursor_ms / 1000, tz=dt.timezone.utc).date())
+    expected, d = [], eff
+    while d <= end:
+        if d == eff or d not in have:
+            expected.append(d)
+        d += dt.timedelta(days=1)
+    assert got == expected
+
+
+@given(
     gaps_min=st.integers(min_value=1, max_value=120),
     tss=st.lists(
         st.tuples(st.integers(min_value=0, max_value=5), st.integers(min_value=0, max_value=10_000)),
