@@ -36,7 +36,7 @@ def cmd_ingest(args: argparse.Namespace) -> int:
     hourly-partitioned parquet. --duration N bounds the run (the
     ingestion-test binary's 15 s raced sleep)."""
     from aetherium_trader_datapipeline_spark.sources.ticks import streaming_ticks
-    from aetherium_trader_datapipeline_spark.streaming.ingest import ingest_stream
+    from aetherium_trader_datapipeline_spark.streaming.ingest import ingest_stream, read_lake
 
     spark = _spark(args.cpus)
     ticks = streaming_ticks(spark, args.symbol, rows_per_second=args.rate)
@@ -55,7 +55,7 @@ def cmd_ingest(args: argparse.Namespace) -> int:
     if args.duration:
         time.sleep(args.duration)
         stop_all()
-        n = spark.read.parquet(args.out).count()
+        n = read_lake(spark, args.out).count()
         print(json.dumps({"ingested_rows": n, "seconds": args.duration}))
     else:  # run until interrupted (reference: raced against ctrl_c)
         try:
@@ -94,8 +94,8 @@ def cmd_backfill(args: argparse.Namespace) -> int:
 
 
 def cmd_gaps(args: argparse.Namespace) -> int:
-    """Gap detection (G1/G2): date-spine anti-join + islands over the
-    store's existing dates for a symbol."""
+    """Gap detection (G1/G2): missing-day islands of [start, end] over
+    the store's existing dates for a symbol."""
     from aetherium_trader_datapipeline_spark.operators.gaps import detect_gaps
     from aetherium_trader_datapipeline_spark.plans.backfill_service import existing_dates
 
@@ -204,6 +204,14 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
+    if hasattr(args, "start"):  # gaps, backfill: a bad range fails before Spark starts
+        from aetherium_trader_datapipeline_spark.operators.gaps import date_range
+
+        try:
+            date_range(args.start, args.end)
+        except ValueError as e:
+            print(e, file=sys.stderr)
+            return 2
     return args.fn(args)
 
 

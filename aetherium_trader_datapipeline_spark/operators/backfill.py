@@ -14,6 +14,8 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aetherium_trader_datapipeline_spark.operators.gaps import date_range, missing_days
+
 
 def resume_start(range_start: dt.date, cursor_ms: int | None) -> dt.date:
     """Clip the range start to the day of the cursor HWM (reference
@@ -35,16 +37,13 @@ def plan_backfill_days(
     """Sorted distinct days to process: {effective_start} ∪ days of
     [effective_start, end] absent from ``present``. Output: (d DATE).
 
-    One aggregation folds the present dates inside the range into a set;
-    the spine minus that set is already sorted and starts after
-    effective_start, so prepending it keeps the order. A cursor past
+    ``missing_days`` of [effective_start, end] are already sorted, so
+    prepending effective_start keeps the order. A cursor past
     ``end`` plans nothing (the reference's range is then empty)."""
-    spark = present.sparkSession
-    eff_start = resume_start(dt.date.fromisoformat(start), cursor_ms)
-    if eff_start > dt.date.fromisoformat(end):
-        return spark.createDataFrame([], "d DATE")
-    lo, hi = F.lit(str(eff_start)).cast("date"), F.lit(end).cast("date")
-    d = F.col(date_col).cast("date")
-    have = present.where(d.between(lo, hi)).agg(F.collect_set(d).alias("have"))
-    missing = F.array_except(F.sequence(lo, hi, F.expr("INTERVAL 1 DAY")), F.col("have"))
-    return have.select(F.explode(F.array_union(F.array(lo), missing)).alias("d"))
+    lo, hi = date_range(start, end)
+    eff_start = resume_start(lo, cursor_ms)
+    if eff_start > hi:
+        return present.sparkSession.createDataFrame([], "d DATE")
+    return missing_days(present, str(eff_start), end, date_col).select(
+        F.explode(F.array_union(F.array(F.lit(eff_start)), F.col("missing"))).alias("d")
+    )

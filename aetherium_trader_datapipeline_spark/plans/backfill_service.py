@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aetherium_trader_datapipeline_spark.operators.backfill import plan_backfill_days
+from aetherium_trader_datapipeline_spark.operators.gaps import date_range
 from aetherium_trader_datapipeline_spark.plans.control_table import (
     COMPLETED,
     FAILED,
@@ -48,7 +49,7 @@ from aetherium_trader_datapipeline_spark.plans.control_table import (
     StaleInstanceError,
     job_key,
 )
-from aetherium_trader_datapipeline_spark.streaming.ingest import LAKE_SCHEMA_DDL, ingest_batch
+from aetherium_trader_datapipeline_spark.streaming.ingest import ingest_batch, read_lake
 
 
 @dataclass
@@ -64,20 +65,9 @@ def existing_dates(spark: SparkSession, data_dir: str, symbol: str) -> DataFrame
     that listing to the symbol's partitions and reads only the partition
     values, no data. Non-empty files are guaranteed by the sink
     (empty-file case of detectors/gap.rs:60-83 cannot occur under Spark's
-    task commit).
-
-    Existence is probed EXPLICITLY: a broad except here used to turn ANY
-    read failure (transient FS error, one corrupt footer) into "empty
-    lake", which made the planner re-fetch and dynamic-overwrite every
-    existing partition (r10 review finding)."""
-    from aetherium_trader_datapipeline_spark.operators.merge import _hadoop_fs
-
-    fs, root = _hadoop_fs(spark, data_dir)
-    if not fs.exists(root):
-        return spark.createDataFrame([], "d DATE")
-    # known schema: an existing but empty directory has none to infer
-    df = spark.read.schema(LAKE_SCHEMA_DDL).parquet(data_dir)
-    return df.where(F.col("symbol") == symbol).select(F.col("date").alias("d")).distinct()
+    task commit). A missing store is empty (``read_lake``)."""
+    lake = read_lake(spark, data_dir)
+    return lake.where(F.col("symbol") == symbol).select(F.col("date").alias("d")).distinct()
 
 
 def backfill_range(
@@ -90,14 +80,10 @@ def backfill_range(
     end: str,
     now: float | None = None,
 ) -> BackfillReport:
+    lo, hi = date_range(start, end)  # a reversed range fails before the job record exists
     key = job_key(symbol, start)
-    day_start_ms = int(
-        dt.datetime.fromisoformat(start).replace(tzinfo=dt.timezone.utc).timestamp() * 1000
-    )
-    end_ms = int(
-        (dt.datetime.fromisoformat(end).replace(tzinfo=dt.timezone.utc)
-         + dt.timedelta(days=1)).timestamp() * 1000
-    )
+    day_start_ms = int(dt.datetime.combine(lo, dt.time(), dt.timezone.utc).timestamp() * 1000)
+    end_ms = day_start_ms + ((hi - lo).days + 1) * 86_400_000
     st = control.initialize_job(key, day_start_ms, end_ms, now=now)
     instance = st.job_instance_id
 

@@ -8,8 +8,9 @@ here a plain driver-side helper since Spark tasks already retry).
 
 Spark-first: the "filename parse" is the partitioned layout itself —
 `symbol=`/`date=` come back as columns, and max(ts) per (symbol, date) is
-one partial-aggregating scan. Holes come from the same detect_gaps
-operator the planner uses.
+one partial-aggregating scan. Holes come from ``detect_gaps``, whose
+missing days are the same ``missing_days`` array the backfill planner
+builds its plan from.
 """
 
 from __future__ import annotations
@@ -20,13 +21,13 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aetherium_trader_datapipeline_spark.operators.gaps import detect_gaps
+from aetherium_trader_datapipeline_spark.operators.gaps import date_range, detect_gaps
 from aetherium_trader_datapipeline_spark.plans.control_table import (
     COMPLETED,
     ControlTable,
     job_key,
 )
-from aetherium_trader_datapipeline_spark.streaming.ingest import LAKE_SCHEMA_DDL
+from aetherium_trader_datapipeline_spark.streaming.ingest import read_lake
 
 
 def bootstrap_control_table(
@@ -45,24 +46,15 @@ def bootstrap_control_table(
     - returned DataFrame: (gap_start, gap_end, days) — the holes in
       [expected_start, expected_end] that need backfill tasks.
     """
-    # disaster recovery must survive the disaster: a missing/empty lake
-    # path means "no days ingested" and the WHOLE expected range is the
-    # gap — previously the read itself crashed the recovery tool (r10
-    # review finding)
-    from aetherium_trader_datapipeline_spark.operators.merge import _hadoop_fs
-
-    fs, root = _hadoop_fs(spark, data_dir)
-    if fs.exists(root):
-        # known schema: an existing but empty directory has none to infer
-        lake = spark.read.schema(LAKE_SCHEMA_DDL).parquet(data_dir)
-        ticks = lake.where(F.col("symbol") == symbol)
-        per_day = (
-            ticks.groupBy("date")
-            .agg(F.max(F.unix_micros("timestamp")).alias("max_ts_us"))
-            .collect()
-        )
-    else:
-        per_day = []
+    date_range(expected_start, expected_end)  # fail before any lake read or job write
+    # a missing or empty lake is "no days ingested": the whole range is the gap
+    per_day = (
+        read_lake(spark, data_dir)
+        .where(F.col("symbol") == symbol)
+        .groupBy("date")
+        .agg(F.max(F.unix_micros("timestamp")).alias("max_ts_us"))
+        .collect()
+    )
     now = now if now is not None else dt.datetime.now(dt.timezone.utc).timestamp()
     for r in per_day:
         day = str(r.date)

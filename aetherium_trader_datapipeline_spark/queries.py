@@ -636,8 +636,9 @@ def q32_ohlcv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Q33: gap detection (op G1 — domain/src/data_gap.rs:29-63 islands algorithm
-# re-expressed as date-spine anti-join + gaps-and-islands).
+# Q33: gap detection (op G1 — domain/src/data_gap.rs:29-63 islands algorithm;
+# the oracle is a date-spine anti-join + gaps-and-islands, the engine one
+# collect_set aggregation + posexplode islands).
 # ---------------------------------------------------------------------------
 
 

@@ -60,8 +60,8 @@ register_sql(
 )
 def x141_gap_detection_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G1 on a sparse calendar (one customer cohort's order dates): the
-    result has many multi-day islands, so the lag/island grouping — not
-    just the anti-join — is what the oracle verifies."""
+    result has many multi-day islands, so the island grouping — not just
+    the missing-day set — is what the oracle verifies."""
     from aetherium_trader_datapipeline_spark.operators.gaps import detect_gaps
 
     t = load_tables(spark, sf_dir)

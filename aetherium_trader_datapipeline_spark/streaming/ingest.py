@@ -13,10 +13,11 @@ validate → derive partition columns → writeStream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from aetherium_trader_datapipeline_spark.operators.merge import _hadoop_fs
 from aetherium_trader_datapipeline_spark.operators.validate import (
     TICK_SCHEMA_DDL,
     tick_valid_expr,
@@ -24,11 +25,20 @@ from aetherium_trader_datapipeline_spark.operators.validate import (
 
 FLUSH_INTERVAL_SECONDS = 5  # reference flush_interval (di.rs:41-42)
 
-# What the sinks below write: tick columns plus the date/hour layout
-# columns. Readers of the lake pass it instead of inferring it, so an
-# existing but empty lake directory reads as an empty frame rather than
-# failing with UNABLE_TO_INFER_SCHEMA.
+# What the sinks below write: tick columns plus the date/hour layout columns.
 LAKE_SCHEMA_DDL = TICK_SCHEMA_DDL + ", date DATE, hour INT"
+
+
+def read_lake(spark: SparkSession, data_dir: str) -> DataFrame:
+    """The lake the sinks below write. The schema is passed, not inferred,
+    so an empty directory reads as empty instead of UNABLE_TO_INFER_SCHEMA;
+    a missing one is probed explicitly and is empty too. Any other read
+    failure raises: a broad except once turned a transient FS error into
+    "empty lake" and a re-fetch of every partition (r10 review finding)."""
+    fs, root = _hadoop_fs(spark, data_dir)
+    if not fs.exists(root):
+        return spark.createDataFrame([], LAKE_SCHEMA_DDL)
+    return spark.read.schema(LAKE_SCHEMA_DDL).parquet(data_dir)
 
 
 def with_partition_cols(df: DataFrame, ts_col: str = "timestamp") -> DataFrame:

@@ -40,6 +40,20 @@ def test_bootstrap_rebuilds_cursor_and_emits_holes(spark, tmp_path, control):
     )
 
 
+def test_bootstrap_rejects_reversed_range(spark, tmp_path, control):
+    """start > end raises before the lake is read or any job is written."""
+    from aetherium_trader_datapipeline_spark.plans.bootstrap import bootstrap_control_table
+    from aetherium_trader_datapipeline_spark.plans.control_table import job_key
+    from aetherium_trader_datapipeline_spark.sources.ticks import historical_ticks
+    from aetherium_trader_datapipeline_spark.streaming.ingest import ingest_batch
+
+    data_dir = str(tmp_path / "lake")
+    ingest_batch(historical_ticks(spark, "NQ", "2024-01-02", today=dt.date(2024, 6, 1)), data_dir)
+    with pytest.raises(ValueError, match="start 2024-01-06 is after end 2024-01-01"):
+        bootstrap_control_table(spark, data_dir, control, "NQ", "2024-01-06", "2024-01-01")
+    assert control.get(job_key("NQ", "2024-01-02")) is None
+
+
 def test_backoff_schedule_deterministic_and_capped(spark):
     from aetherium_trader_datapipeline_spark.plans.bootstrap import backoff_delays
 

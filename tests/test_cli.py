@@ -52,6 +52,20 @@ def test_cli_backfill_gaps_verify(spark, capsys):
     assert info["num_rows"] == 3 * 1440
 
 
+def test_cli_rejects_reversed_range(capsys, tmp_path):
+    """gaps and backfill print a reversed range's error to stderr and exit
+    2 before Spark starts, instead of a JVM trace or a COMPLETED job."""
+    ctl = tmp_path / "ctl"
+    for cmd in (["gaps"], ["backfill", "--control-dir", str(ctl)]):
+        rc = main(cmd + ["--start", "2024-01-05", "--end", "2024-01-02",
+                         "--data-dir", str(tmp_path / "data")])
+        captured = capsys.readouterr()
+        assert rc == 2
+        assert "start 2024-01-05 is after end 2024-01-02" in captured.err
+        assert captured.out == ""
+    assert not ctl.exists()
+
+
 def test_cli_bounded_ingest(spark, capsys):
     base = tempfile.mkdtemp(prefix="cli-ingest-")
     rc = main(

@@ -190,6 +190,23 @@ def test_backfill_end_before_cursor_day_plans_nothing(spark, tmp_path, control):
     assert spark.read.parquet(data_dir).count() == 5 * 1440
 
 
+def test_backfill_reversed_range_rejected_before_job_record(spark, tmp_path, control):
+    """start > end used to write a COMPLETED job record whose cursor lay
+    past its end_time and report success. It now raises before any
+    control-table write, fetch or lake write."""
+    from aetherium_trader_datapipeline_spark.plans.backfill_service import backfill_range
+    from aetherium_trader_datapipeline_spark.plans.control_table import job_key
+
+    def fetch(spark, symbol, day):
+        raise AssertionError(f"fetched {day} for a rejected range")
+
+    data_dir = tmp_path / "t"
+    with pytest.raises(ValueError, match="start 2024-01-05 is after end 2024-01-02"):
+        backfill_range(spark, control, fetch, str(data_dir), "NQ", "2024-01-05", "2024-01-02")
+    assert control.get(job_key("NQ", "2024-01-05")) is None
+    assert not data_dir.exists()
+
+
 def test_backfill_write_failure_fails_whole_batch(spark, tmp_path, control):
     """The fetched days land in ONE dynamic-overwrite write. A day whose
     frame fails only at execution fails that write, which commits

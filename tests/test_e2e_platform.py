@@ -11,6 +11,7 @@ import os
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -85,9 +86,11 @@ def test_ingest_outage_gap_backfill_verify(spark):
     assert st.cursor > 0
 
 
-def test_empty_lake_dir_reads_as_empty_lake(spark):
-    """A fresh `mkdir data` is an empty lake to gap detection, bootstrap and
-    backfill; reading it used to fail schema inference."""
+@pytest.mark.parametrize("layout", ["missing", "empty"])
+def test_empty_lake_dir_reads_as_empty_lake(spark, layout):
+    """A missing lake directory, or a fresh `mkdir data`, is an empty lake
+    to gap detection, bootstrap and backfill; reading an empty directory
+    used to fail schema inference."""
     from aetherium_trader_datapipeline_spark.operators.gaps import detect_gaps
     from aetherium_trader_datapipeline_spark.plans.backfill_service import (
         backfill_range,
@@ -99,7 +102,8 @@ def test_empty_lake_dir_reads_as_empty_lake(spark):
 
     base = tempfile.mkdtemp(prefix="e2e-empty-")
     data = f"{base}/data"
-    os.mkdir(data)
+    if layout == "empty":
+        os.mkdir(data)
     assert existing_dates(spark, data, "NQ").count() == 0
     boot = bootstrap_control_table(
         spark, data, ControlTable(f"{base}/boot"), "NQ", "2025-12-01", "2025-12-02"

@@ -224,6 +224,19 @@ def test_gap_detection_islands(spark):
     ]
 
 
+def test_reversed_date_range_rejected_before_spark_work(spark):
+    """start > end raises ValueError when the plan is built, like the
+    reference's DateRange (date_range.rs:11-16); detect_gaps used to fail
+    only at collect(), with a JVM IllegalArgumentException."""
+    from aetherium_trader_datapipeline_spark.operators.backfill import plan_backfill_days
+    from aetherium_trader_datapipeline_spark.operators.gaps import detect_gaps, missing_days
+
+    present = spark.createDataFrame([], "d DATE")
+    for build in (detect_gaps, missing_days, plan_backfill_days):
+        with pytest.raises(ValueError, match="start 2024-01-05 is after end 2024-01-02"):
+            build(present, "2024-01-05", "2024-01-02")
+
+
 def test_backfill_plan_resume_and_gaps(spark):
     from aetherium_trader_datapipeline_spark.operators.backfill import plan_backfill_days
     import datetime as dt

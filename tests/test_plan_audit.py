@@ -470,11 +470,9 @@ _CHUNK_GRID = ("prefix offsets over the <=1000-row value-range chunk grid "
                "should switch to quantile (approx_percentile) boundaries "
                "or recurse one sub-chunk level on oversized chunks")
 _GLOBAL_WINDOW_BOUNDS: dict[str, str] = {
-    # --- generated-spine / day-grid operators ---
-    "q33_gap_detection": "per-(symbol,day) presence grid vs a generated day spine; O(calendar days)",
-    # (x52_backfill_plan left this list: the planner is one collect_set
-    # aggregation plus an array difference, no window)
-    "x141_gap_detection_sparse": "sparse-island day grid; O(calendar days)",
+    # (q33_gap_detection, x52_backfill_plan and x141_gap_detection_sparse
+    # left this list: gap detection and the backfill planner are one
+    # collect_set aggregation plus an array difference, no window)
     # --- value-range chunked rewrites (r11) ---
     "x198_gini": _CHUNK_GRID,
     # (x210_rfm left this list in r14: the stacked chunked-rank rewrite

@@ -108,6 +108,24 @@ def test_backfill_range_is_one_write_of_one_task_per_day(spark, tmp_path, monkey
     assert writes == [3]  # one write, one partition per day
 
 
+def test_detect_gaps_has_no_window_or_join(spark):
+    """Gap detection is one aggregation of the present dates, an array
+    difference and a group by island: a return to a day spine joined
+    against the present dates, or to a row_number() window over all
+    missing days, fails here."""
+    import datetime as dt
+
+    from aetherium_trader_datapipeline_spark.operators.gaps import detect_gaps
+
+    present = spark.createDataFrame([(dt.date(2024, 1, d),) for d in (1, 2, 5, 9)], "d DATE")
+    df = detect_gaps(present, "2024-01-01", "2024-01-10")
+    assert [(str(r.gap_start), r.days) for r in df.collect()] == [
+        ("2024-01-03", 2), ("2024-01-06", 3), ("2024-01-10", 1)
+    ]
+    plan = plan_of(df)  # the executed (AQE final) plan after collect()
+    assert "Window" not in plan and "Join" not in plan, plan
+
+
 def test_asof_single_shuffle(spark, tables):
     """The as-of window formulation must shuffle once (one Exchange on
     user_id), never a nested-loop pair join."""

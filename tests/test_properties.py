@@ -23,7 +23,7 @@ START = dt.date(2024, 1, 1)
 
 
 @given(
-    present=st.sets(st.integers(min_value=0, max_value=30), max_size=31),
+    present=st.sets(st.integers(min_value=-3, max_value=33), max_size=37),
     span=st.integers(min_value=0, max_value=30),
 )
 @settings(**SETTINGS)
@@ -31,7 +31,8 @@ def test_detect_gaps_matches_bruteforce(spark, present, span):
     from aetherium_trader_datapipeline_spark.operators.gaps import detect_gaps
 
     end = START + dt.timedelta(days=span)
-    days = [START + dt.timedelta(days=i) for i in sorted(present) if i <= span]
+    # present days outside [START, end] are kept: the range clip is tested too
+    days = [START + dt.timedelta(days=i) for i in sorted(present)]
     pdf = spark.createDataFrame([(d,) for d in days] or [(None,)], "d DATE").where(
         "d IS NOT NULL"
     )
