@@ -126,8 +126,6 @@ def merge_upsert(
     cannot see partitions the batch doesn't touch, by design (that
     pruning is what makes the merge O(changed), not O(table)).
     """
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     tmp_spill: str | None = None
     try:
         touched = [r[0] for r in changes.select(partition_col).distinct().collect()]
@@ -223,6 +221,11 @@ def merge_upsert(
             merged.repartition(F.col(partition_col))
             .sortWithinPartitions(*key_cols)
             .write.mode("overwrite")
+            # scoped to THIS write: a session-wide conf set/restore races
+            # with a concurrent merge (merge_stream runs on a streaming
+            # thread) — the first to restore "static" turns the other's
+            # overwrite into a whole-table replace
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partition_col)
             .parquet(table_path)
         )
@@ -247,7 +250,6 @@ def merge_upsert(
             "emptied_partitions": len(emptied),
         }
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         if tmp_spill is not None:
             # delete the durable spill whether the merge committed or not
             # (on failure the dynamic overwrite never committed, so the
@@ -320,58 +322,58 @@ def compact_partitions(
     not exact file sizes; a caller needing tighter sizing should weight
     the budget per partition by estimated bytes/row from the listing.
     """
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        sizes = _partition_sizes(spark, table_path, partition_col)
-        if partitions is not None:
-            want = {None if p is None else str(p) for p in partitions}
-            sizes = {v: b for v, b in sizes.items() if v in want}
-        # per-partition output-file count from the listing
-        k_rows = [
-            (v, max(1, -(-b // target_file_bytes))) for v, (b, _n) in sizes.items()
-        ]
-        n_out = sum(k for _v, k in k_rows)
+    sizes = _partition_sizes(spark, table_path, partition_col)
+    if partitions is not None:
+        want = {None if p is None else str(p) for p in partitions}
+        sizes = {v: b for v, b in sizes.items() if v in want}
+    # per-partition output-file count from the listing
+    k_rows = [
+        (v, max(1, -(-b // target_file_bytes))) for v, (b, _n) in sizes.items()
+    ]
+    n_out = sum(k for _v, k in k_rows)
 
-        df = spark.read.option("mergeSchema", "true").parquet(table_path)
-        if partitions is not None:
-            non_null = [p for p in partitions if p is not None]
-            pred = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-            if any(p is None for p in partitions):
-                pred = pred | F.col(partition_col).isNull()
-            df = df.where(pred)
+    df = spark.read.option("mergeSchema", "true").parquet(table_path)
+    if partitions is not None:
+        non_null = [p for p in partitions if p is not None]
+        pred = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
+        if any(p is None for p in partitions):
+            pred = pred | F.col(partition_col).isNull()
+        df = df.where(pred)
 
-        # Range partitioning on (partition, sort key): boundaries from
-        # Spark's sample, so each task — hence each output file — holds a
-        # contiguous slice of the sort-key domain within its table
-        # partition.  A trailing row-hash TIE-BREAKER lets the range
-        # partitioner split runs of EQUAL sort keys across tasks —
-        # without it a low-cardinality sort key (3 statuses, say)
-        # collapses to |distinct keys| tasks and re-creates the oversized
-        # single-task files this rewrite removes (r11 review).  Cost: a
-        # boundary VALUE may straddle two files (one extra file probe per
-        # boundary value); every non-boundary value still maps to exactly
-        # one file, so footer min/max pruning stays file-effective.
-        range_cols = [F.col(partition_col)] + [
-            F.col(c) for c in (sort_cols or [c for c in df.columns if c != partition_col])
-        ]
-        # hash() rejects MapType — skip map-bearing columns (fully
-        # identical rows then tie, which is harmless: they carry the
-        # same content into whichever file wins)
-        hashable = [c for c, t in df.dtypes if "map<" not in t]
-        tiebreak = (
-            F.hash(*[F.col(c) for c in hashable]) if hashable else F.lit(0)
-        )
-        out = df.repartitionByRange(
-            int(max(1, n_out)), *range_cols, tiebreak
-        )
-        if sort_cols:
-            out = out.sortWithinPartitions(partition_col, *sort_cols)
-        out.write.mode("overwrite").partitionBy(partition_col).parquet(table_path)
-        return {
-            "partitions": len(sizes),
-            "files_before": sum(n for _b, n in sizes.values()),
-            "target_files": int(max(1, n_out)),
-        }
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # Range partitioning on (partition, sort key): boundaries from
+    # Spark's sample, so each task — hence each output file — holds a
+    # contiguous slice of the sort-key domain within its table
+    # partition.  A trailing row-hash TIE-BREAKER lets the range
+    # partitioner split runs of EQUAL sort keys across tasks —
+    # without it a low-cardinality sort key (3 statuses, say)
+    # collapses to |distinct keys| tasks and re-creates the oversized
+    # single-task files this rewrite removes (r11 review).  Cost: a
+    # boundary VALUE may straddle two files (one extra file probe per
+    # boundary value); every non-boundary value still maps to exactly
+    # one file, so footer min/max pruning stays file-effective.
+    range_cols = [F.col(partition_col)] + [
+        F.col(c) for c in (sort_cols or [c for c in df.columns if c != partition_col])
+    ]
+    # hash() rejects MapType — skip map-bearing columns (fully
+    # identical rows then tie, which is harmless: they carry the
+    # same content into whichever file wins)
+    hashable = [c for c, t in df.dtypes if "map<" not in t]
+    tiebreak = (
+        F.hash(*[F.col(c) for c in hashable]) if hashable else F.lit(0)
+    )
+    out = df.repartitionByRange(
+        int(max(1, n_out)), *range_cols, tiebreak
+    )
+    if sort_cols:
+        out = out.sortWithinPartitions(partition_col, *sort_cols)
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(table_path)
+    )
+    return {
+        "partitions": len(sizes),
+        "files_before": sum(n for _b, n in sizes.values()),
+        "target_files": int(max(1, n_out)),
+    }

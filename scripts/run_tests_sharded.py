@@ -33,12 +33,14 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # seconds per test FILE, measured from the r11 full-suite run
-# (junitxml sums). Refresh occasionally; missing files are estimated.
+# (junitxml sums); test_plan_audit.py re-measured with --durations=0 on
+# 4 cores after its four registry passes became one. Refresh
+# occasionally; missing files are estimated.
 _DURATIONS: dict[str, float] = {}  # populated below by _load_measured()
 
 _MEASURED = """
 test_queries_oracle.py 372
-test_plan_audit.py 302
+test_plan_audit.py 136
 test_streaming.py 164
 test_properties.py 79
 test_operators.py 79

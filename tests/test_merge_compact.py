@@ -439,3 +439,31 @@ def test_merge_upsert_refuses_mixed_partition_layout(spark):
     with pytest.raises(ValueError, match="foreign partition layout"):
         merge_upsert(spark, base, upd, key_cols=["k"], partition_col="d")
     assert _rows(spark, base) == {(1, "a", "p1")}  # untouched
+
+
+def test_merge_and_compact_leave_session_conf_alone(spark, monkeypatch):
+    """Dynamic partition overwrite is a per-write option, never a
+    session-conf set/restore: merge_stream runs merge_upsert on a
+    streaming thread, and two overlapping set/restore pairs let the first
+    to finish restore "static" under the other's pending overwrite, which
+    then replaces the whole table root."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        calls.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    base = os.path.join(tempfile.mkdtemp(prefix="merge-conf-"), "t")
+    seed = spark.createDataFrame(
+        [(1, "a", "p1"), (2, "b", "p2")], "k int, v string, d string"
+    )
+    merge_upsert(spark, base, seed, key_cols=["k"], partition_col="d")
+    upd = spark.createDataFrame([(1, "A", "p1")], "k int, v string, d string")
+    merge_upsert(spark, base, upd, key_cols=["k"], partition_col="d")
+    compact_partitions(spark, base, partition_col="d", partitions=["p1"])
+    assert calls == []
+    assert _rows(spark, base) == {(1, "A", "p1"), (2, "b", "p2")}

@@ -1,53 +1,166 @@
 """Physical-plan invariants over the ENTIRE registry.
 
-SCALE.md argues every query avoids unbounded join fan-out and reads only
-the columns it needs; these tests make the two claims executable:
+SCALE.md argues every query avoids unbounded join fan-out and
+single-task frames over raw rows, and reads only the columns it needs;
+these tests make the claims executable:
 
 1. No registry query may plan a ``CartesianProduct``. Scalar cross joins
    (single-row count/vocab/cap CTEs) plan as BroadcastNestedLoopJoin and
    are fine; a CartesianProduct means a non-equi join with two large
    sides — the shape that detonates at 100 TB.
-2. Column pruning must reach the parquet scan: queries known to touch a
+2. A BroadcastNestedLoopJoin's build side must be provably bounded.
+3. A window band over ``Exchange SinglePartition`` must sit on a collapse.
+4. Every unpartitioned window must be auto-bounded or carry a written
+   bound argument.
+5. Column pruning must reach the parquet scan: queries known to touch a
    narrow projection must show a ReadSchema that excludes the wide
    columns (e.g. q01 aggregates l_orderkey only — a scan that also reads
    l_comment would ship the table's widest column for nothing).
 
+Gates 1-4 share one pass: the module-scoped ``registry_findings`` fixture
+builds each registry key once and keeps only what ``plan_findings``
+reports for it, and the proof-cases run that same ``plan_findings`` on
+hand-written queries.  Every check walks the plan as a py4j tree
+(``tests.windowaudit.walk``).
+
 Plans are compiled (analyzed + physical planning) without executing the
 query — with one caveat: operators that eagerly localCheckpoint or count
 during plan CONSTRUCTION (x172's pagerank materializes its edge list)
-do run those setup jobs. At sf0.001 that keeps the full audit in tens of
-seconds.
+do run those setup jobs.
 """
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from aetherium_trader_datapipeline_spark.queries import REGISTRY, queries
+from aetherium_trader_datapipeline_spark.tables import load_tables
 from tests.conftest import SF_DIR
+from tests.windowaudit import AUTO_BOUNDED, global_windows, walk
 
 
-def _spark_plan(spark, key: str) -> str:
-    df = REGISTRY[key].run(spark, SF_DIR)
-    return df._jdf.queryExecution().sparkPlan().toString()
+def _spark_plan(spark, key: str):
+    return REGISTRY[key].run(spark, SF_DIR)._jdf.queryExecution().sparkPlan()
 
 
-def _executed_plan(spark, key: str) -> str:
-    """Post-exchange-insertion plan (AQE initial): the only plan text in
-    which Exchange nodes exist — sparkPlan() is PRE-EnsureRequirements, so
-    any check that greps for 'Exchange' against it passes vacuously."""
-    df = REGISTRY[key].run(spark, SF_DIR)
-    return df._jdf.queryExecution().executedPlan().toString()
+# Evidence in a build-side subtree that its row count is bounded regardless
+# of input scale: a scalar aggregate, a literal/local relation, a limit, or
+# a pushed point-equality filter (one key → O(1) rows).
+_BOUNDED_MARKERS = (
+    "HashAggregate(keys=[], ",
+    "SortAggregate(key=[], ",
+    "LocalTableScan",
+    "OneRowRelation",
+    "CollectLimit",
+    "GlobalLimit",
+    "TakeOrderedAndProject",
+    "EqualTo(",
+)
+
+# SortAggregate prints the singular "key=[" — match both
+_KEYED_AGG_RE = re.compile(
+    r"(?:HashAggregate|SortAggregate|ObjectHashAggregate)\(keys?=\[[^\]]"
+)
 
 
-def test_no_cartesian_product_anywhere(spark):
+def _has_collapse(subtree: str) -> bool:
+    return bool(_KEYED_AGG_RE.search(subtree)) or any(
+        m in subtree for m in _BOUNDED_MARKERS
+    )
+
+
+def _build_sides(spark_plan):
+    """The build-side child of every BroadcastNestedLoopJoin in the plan."""
+    for node, _ in walk(spark_plan):
+        if node.nodeName() == "BroadcastNestedLoopJoin":
+            build_right = node.buildSide().toString() == "BuildRight"
+            yield node.right() if build_right else node.left()
+
+
+def _global_bands(executed_plan):
+    """Every ``Exchange SinglePartition`` that feeds a window band (a
+    Window node among its two nearest ancestors) — scalar-aggregate final
+    exchanges are not bands."""
+    for node, ancestors in walk(executed_plan):
+        if (
+            node.nodeName() == "Exchange"
+            and node.outputPartitioning().toString() == "SinglePartition"
+            and any("Window" in a.nodeName() for a in ancestors[-2:])
+        ):
+            yield node
+
+
+def plan_findings(df) -> dict:
+    """What gates 1-4 flag in one DataFrame's plans: offending subtrees
+    (text, truncated) for Cartesian products, unbounded BNLJ build sides
+    and global bands over an uncollapsed frame, plus the classified
+    unpartitioned windows."""
+    qe = df._jdf.queryExecution()
+    spark_plan = qe.sparkPlan()
+    bnlj_sides = [side.toString() for side in _build_sides(spark_plan)]
+    # Exchanges exist only after EnsureRequirements: sparkPlan() is
+    # before it, so the band check reads the executed plan
+    bands = [band.toString() for band in _global_bands(qe.executedPlan())]
+    return {
+        "cartesian": [
+            node.toString()[:400]
+            for node, _ in walk(spark_plan)
+            if node.nodeName() == "CartesianProduct"
+        ],
+        "bnlj": [
+            st[:400] for st in bnlj_sides if not any(m in st for m in _BOUNDED_MARKERS)
+        ],
+        "band": [st[:400] for st in bands if not _has_collapse(st)],
+        "windows": global_windows(df),
+    }
+
+
+@pytest.fixture(scope="module")
+def registry_findings(spark) -> dict[str, dict]:
+    """``plan_findings`` for every registry key, each key built once."""
     queries()
-    offenders = []
-    for key in REGISTRY:
-        plan = _spark_plan(spark, key)
-        if "CartesianProduct" in plan:
-            offenders.append(key)
-    assert offenders == [], f"CartesianProduct planned in: {offenders}"
+    return {key: plan_findings(q.run(spark, SF_DIR)) for key, q in REGISTRY.items()}
+
+
+def _offenders(found: dict[str, list], allowed) -> tuple[dict, list]:
+    """(unargued offenders by key, stale allowlist entries) for one gate,
+    from each key's list of flagged findings."""
+    hit = {k: v for k, v in found.items() if v}
+    unargued = {k: v for k, v in hit.items() if k not in allowed}
+    return unargued, sorted(set(allowed) - set(hit))
+
+
+def test_no_cartesian_product_anywhere(registry_findings):
+    offenders, _ = _offenders(
+        {k: f["cartesian"] for k, f in registry_findings.items()}, ()
+    )
+    assert offenders == {}, f"CartesianProduct planned in: {sorted(offenders)}"
+
+
+def test_cartesian_checker_flags_unbroadcastable_non_equi_join(spark):
+    """Proof-case: a non-equi self-join of lineitem plans as a
+    CartesianProduct once neither side may broadcast, and the Cartesian
+    check flags it; at the session's broadcast threshold the same join
+    plans as a BroadcastNestedLoopJoin instead, which the BNLJ check
+    owns."""
+    load_tables(spark, SF_DIR)
+    sql = (
+        "SELECT a.l_orderkey FROM lineitem a JOIN lineitem b "
+        "ON a.l_quantity < b.l_quantity"
+    )
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        unbroadcastable = plan_findings(spark.sql(sql))
+    finally:
+        spark.conf.set(conf, prev)
+    assert unbroadcastable["cartesian"], "checker failed to flag a CartesianProduct"
+    broadcast = plan_findings(spark.sql(sql))
+    assert broadcast["cartesian"] == [], broadcast["cartesian"]
+    assert broadcast["bnlj"], "the broadcast form left the BNLJ check's view"
 
 
 @pytest.mark.parametrize(
@@ -86,7 +199,7 @@ def test_no_cartesian_product_anywhere(spark):
 )
 def test_column_pruning_reaches_scan(spark, key, table, must_be_absent):
     queries()
-    plan = _spark_plan(spark, key)
+    plan = _spark_plan(spark, key).toString()
     scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
     assert scans, f"{key}: no parquet scan in plan"
     target = [ln for ln in scans if f"{table}.parquet" in ln]
@@ -97,61 +210,6 @@ def test_column_pruning_reaches_scan(spark, key, table, must_be_absent):
         )
 
 
-def _marker_col(line: str) -> int:
-    import re
-
-    m = re.search(r"[:+]- ", line)
-    return m.start() if m else -1
-
-
-def _direct_children(lines: list[str], idx: int) -> list[int]:
-    """Indices of the direct children of the tree node at lines[idx]."""
-    base = _marker_col(lines[idx])
-    kids, i = [], idx + 1
-    while i < len(lines):
-        c = _marker_col(lines[i])
-        if c == -1:
-            i += 1
-            continue
-        if c <= base:
-            break
-        kids.append(i)
-        j = i + 1
-        while j < len(lines):
-            cj = _marker_col(lines[j])
-            if cj != -1 and cj <= c:
-                break
-            j += 1
-        i = j
-    return kids
-
-
-def _subtree(lines: list[str], idx: int) -> str:
-    base = _marker_col(lines[idx])
-    out, j = [lines[idx]], idx + 1
-    while j < len(lines):
-        cj = _marker_col(lines[j])
-        if cj != -1 and cj <= base:
-            break
-        out.append(lines[j])
-        j += 1
-    return "\n".join(out)
-
-
-# Evidence in a build-side subtree that its row count is bounded regardless
-# of input scale: a scalar aggregate, a literal/local relation, a limit, or
-# a pushed point-equality filter (one key → O(1) rows).
-_BOUNDED_MARKERS = (
-    "HashAggregate(keys=[], ",
-    "SortAggregate(key=[], ",
-    "LocalTableScan",
-    "OneRowRelation",
-    "CollectLimit",
-    "GlobalLimit",
-    "TakeOrderedAndProject",
-    "EqualTo(",
-)
-
 # Keys whose BNLJ build side is data-proportional by DESIGN, with the reason
 # a reviewer should hold it to. Keep this list short and justified.
 _BNLJ_ALLOWED = {
@@ -161,32 +219,21 @@ _BNLJ_ALLOWED = {
 }
 
 
-def test_no_large_side_bnlj(spark):
+def test_no_large_side_bnlj(registry_findings):
     """A BroadcastNestedLoopJoin is only acceptable when its BUILD side is
     provably bounded (scalar agg / literal / limit / point filter). A BNLJ
     whose broadcast side grows with the data is the x177 r3 hazard:
     Θ(|left|×|right|) predicate evaluations that detonate at 100 TB even
     though the plan contains no CartesianProduct."""
-    queries()
-    offenders = []
-    for key in REGISTRY:
-        if key in _BNLJ_ALLOWED:
-            continue
-        plan = _spark_plan(spark, key)
-        if "BroadcastNestedLoopJoin" not in plan:
-            continue
-        lines = plan.splitlines()
-        for i, ln in enumerate(lines):
-            if "BroadcastNestedLoopJoin" not in ln:
-                continue
-            kids = _direct_children(lines, i)
-            if len(kids) < 2:
-                continue  # root-level formatting edge; covered by kids below
-            build_idx = kids[1] if "BuildRight" in ln else kids[0]
-            st = _subtree(lines, build_idx)
-            if not any(m in st for m in _BOUNDED_MARKERS):
-                offenders.append(f"{key}: unbounded BNLJ build side:\n{st[:400]}")
-    assert offenders == [], "\n\n".join(offenders)
+    offenders, stale = _offenders(
+        {k: f["bnlj"] for k, f in registry_findings.items()}, _BNLJ_ALLOWED
+    )
+    assert offenders == {}, "\n\n".join(
+        f"{k}: unbounded BNLJ build side:\n{st}"
+        for k, v in offenders.items()
+        for st in v
+    )
+    assert stale == [], f"stale BNLJ allowlist entries: {stale}"
 
 
 def test_bnlj_checker_flags_prefix_x177_shape(spark):
@@ -194,8 +241,6 @@ def test_bnlj_checker_flags_prefix_x177_shape(spark):
     raw events on a datediff BETWEEN inequality) must be flagged by the
     BNLJ checker — it planned a BroadcastNestedLoopJoin whose build side
     was the full events scan."""
-    from aetherium_trader_datapipeline_spark.tables import load_tables
-
     load_tables(spark, SF_DIR)
     df = spark.sql(
         """
@@ -206,19 +251,9 @@ def test_bnlj_checker_flags_prefix_x177_shape(spark):
         GROUP BY s.d
         """
     )
-    plan = df._jdf.queryExecution().sparkPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan, "shape changed; update proof-case"
-    lines = plan.splitlines()
-    flagged = False
-    for i, ln in enumerate(lines):
-        if "BroadcastNestedLoopJoin" not in ln:
-            continue
-        kids = _direct_children(lines, i)
-        build_idx = kids[1] if "BuildRight" in ln else kids[0]
-        st = _subtree(lines, build_idx)
-        if not any(m in st for m in _BOUNDED_MARKERS):
-            flagged = True
-    assert flagged, "checker failed to flag an events-sized BNLJ build side"
+    assert plan_findings(df)["bnlj"], (
+        "checker failed to flag an events-sized BNLJ build side"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -238,59 +273,17 @@ _GLOBAL_BAND_ALLOWED: dict[str, str] = {
     # recognizes; add entries ONLY with an argued sub-linear frame)
 }
 
-_KEYED_AGG_RE = None
 
-
-def _has_collapse(subtree: str) -> bool:
-    import re
-
-    global _KEYED_AGG_RE
-    if _KEYED_AGG_RE is None:
-        _KEYED_AGG_RE = re.compile(
-            # SortAggregate prints the singular "key=[" — match both
-            r"(?:HashAggregate|SortAggregate|ObjectHashAggregate)\(keys?=\[[^\]]"
-        )
-    return bool(_KEYED_AGG_RE.search(subtree)) or any(
-        m in subtree for m in _BOUNDED_MARKERS
+def test_global_band_requires_collapse(registry_findings):
+    offenders, stale = _offenders(
+        {k: f["band"] for k, f in registry_findings.items()}, _GLOBAL_BAND_ALLOWED
     )
-
-
-def test_global_band_requires_collapse(spark):
-    queries()
-    offenders = []
-    for key in REGISTRY:
-        if key in _GLOBAL_BAND_ALLOWED:
-            continue
-        plan = _executed_plan(spark, key)
-        if "Exchange SinglePartition" not in plan:
-            continue
-        lines = plan.splitlines()
-        # ancestor stack: nearest enclosing node per marker depth
-        for i, ln in enumerate(lines):
-            if "Exchange SinglePartition" not in ln:
-                continue
-            col = _marker_col(lines[i])
-            # find nearest ancestors (strictly smaller marker col, upward)
-            anc, c = [], col
-            for j in range(i - 1, -1, -1):
-                cj = _marker_col(lines[j])
-                if cj != -1 and cj < c:
-                    anc.append(lines[j])
-                    c = cj
-                if len(anc) >= 3:
-                    break
-            feeding_band = any(
-                ("Window" in a or "WindowGroupLimit" in a) for a in anc[:2]
-            )
-            if not feeding_band:
-                # scalar-agg final exchanges etc. — not a band
-                continue
-            st = _subtree(lines, i)
-            if not _has_collapse(st):
-                offenders.append(
-                    f"{key}: global band over an uncollapsed frame:\n{st[:400]}"
-                )
-    assert offenders == [], "\n\n".join(offenders)
+    assert offenders == {}, "\n\n".join(
+        f"{k}: global band over an uncollapsed frame:\n{st}"
+        for k, v in offenders.items()
+        for st in v
+    )
+    assert stale == [], f"stale global-band allowlist entries: {stale}"
 
 
 def test_global_band_checker_flags_raw_row_band(spark):
@@ -298,37 +291,14 @@ def test_global_band_checker_flags_raw_row_band(spark):
     banned x574-r6 shape — a single-partition sort of the full table)
     must be flagged by the global-band checker, while the same band over
     a distinct-value collapse must pass."""
-    from aetherium_trader_datapipeline_spark.tables import load_tables
-
     load_tables(spark, SF_DIR)
-
-    def offends(sql: str) -> bool:
-        plan = (
-            spark.sql(sql)._jdf.queryExecution().executedPlan().toString()
-        )
-        lines = plan.splitlines()
-        for i, ln in enumerate(lines):
-            if "Exchange SinglePartition" not in ln:
-                continue
-            anc, c = [], _marker_col(lines[i])
-            for j in range(i - 1, -1, -1):
-                cj = _marker_col(lines[j])
-                if cj != -1 and cj < c:
-                    anc.append(lines[j])
-                    c = cj
-                if len(anc) >= 3:
-                    break
-            if not any("Window" in a or "WindowGroupLimit" in a for a in anc[:2]):
-                continue
-            if not _has_collapse(_subtree(lines, i)):
-                return True
-        return False
-
     raw_band = (
         "SELECT l_orderkey, SUM(l_quantity) OVER (ORDER BY l_orderkey, "
         "l_linenumber ROWS UNBOUNDED PRECEDING) AS cum FROM lineitem"
     )
-    assert offends(raw_band), "checker failed to flag a raw-row global band"
+    assert plan_findings(spark.sql(raw_band))["band"], (
+        "checker failed to flag a raw-row global band"
+    )
 
     collapsed_band = (
         "WITH g AS (SELECT l_quantity AS v, COUNT(*) AS c FROM lineitem "
@@ -336,7 +306,7 @@ def test_global_band_checker_flags_raw_row_band(spark):
         "SELECT v, SUM(c) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum "
         "FROM g"
     )
-    assert not offends(collapsed_band), (
+    assert not plan_findings(spark.sql(collapsed_band))["band"], (
         "checker flagged a band over a distinct-value collapse"
     )
 
@@ -368,19 +338,13 @@ _SCALAR_BROADCAST_PROOFS = {
 @pytest.mark.parametrize("key", sorted(_SCALAR_BROADCAST_PROOFS))
 def test_scalar_broadcast_build_side_proof(spark, key):
     queries()
-    plan = _spark_plan(spark, key)
-    lines = plan.splitlines()
-    bnlj_rows = [i for i, ln in enumerate(lines) if "BroadcastNestedLoopJoin" in ln]
-    assert bnlj_rows, (
+    sides = [side.toString() for side in _build_sides(_spark_plan(spark, key))]
+    assert sides, (
         f"{key}: expected the scalar-broadcast CROSS JOIN shape; plan has no "
         "BroadcastNestedLoopJoin — the argued bound no longer applies, "
         "re-derive it (or drop this proof if the cross join is gone)"
     )
-    for i in bnlj_rows:
-        kids = _direct_children(lines, i)
-        assert len(kids) == 2, f"{key}: malformed BNLJ node:\n{lines[i]}"
-        build_idx = kids[1] if "BuildRight" in lines[i] else kids[0]
-        st = _subtree(lines, build_idx)
+    for st in sides:
         assert "HashAggregate(keys=[], " in st or "SortAggregate(key=[], " in st, (
             f"{key}: BNLJ build side is no longer a SCALAR aggregate — the "
             f"one-row broadcast bound is broken:\n{st[:400]}"
@@ -391,7 +355,7 @@ def test_filter_pushdown_reaches_scan(spark):
     """q02 filters on l_shipdate/l_returnflag — both must appear as
     PushedFilters on the parquet scan, not only as a post-scan Filter."""
     queries()
-    plan = _spark_plan(spark, "q02_filter_project")
+    plan = _spark_plan(spark, "q02_filter_project").toString()
     scan = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
     assert scan and "PushedFilters: [" in scan[0]
     pushed = scan[0].split("PushedFilters: [", 1)[1]
@@ -571,46 +535,33 @@ _GLOBAL_WINDOW_BOUNDS: dict[str, str] = {
 }
 
 
-def test_unpartitioned_windows_bounded_or_argued(spark):
+def test_unpartitioned_windows_bounded_or_argued(registry_findings):
     """Every registry key's empty-partition-spec windows must classify as
     bounded_by_limit / bounded_by_scalar_agg, or the key carries a written
     bound argument in _GLOBAL_WINDOW_BOUNDS.  Stale allowlist entries
     (keys whose windows all became auto-bounded) fail too, so the list
     stays an honest inventory."""
-    from tests.windowaudit import AUTO_BOUNDED, global_windows
-
-    queries()
-    offenders, argued_hit = [], set()
-    for key in REGISTRY:
-        windows = global_windows(REGISTRY[key].run(spark, SF_DIR))
-        needs = [w for w in windows if w["status"] not in AUTO_BOUNDED]
-        if not needs:
-            continue
-        if key in _GLOBAL_WINDOW_BOUNDS:
-            argued_hit.add(key)
-            continue
-        offenders.append(f"{key}: {needs}")
-    assert offenders == [], (
+    needs = {
+        k: [w for w in f["windows"] if w["status"] not in AUTO_BOUNDED]
+        for k, f in registry_findings.items()
+    }
+    offenders, stale = _offenders(needs, _GLOBAL_WINDOW_BOUNDS)
+    assert offenders == {}, (
         "unargued single-partition window(s) — rewrite (LIMIT-first, "
         "scalar-agg, or value-range chunking) or add a bound argument:\n"
-        + "\n".join(offenders)
+        + "\n".join(f"{k}: {v}" for k, v in offenders.items())
     )
-    stale = set(_GLOBAL_WINDOW_BOUNDS) - argued_hit
-    assert stale == set(), f"stale window-bound allowlist entries: {sorted(stale)}"
+    assert stale == [], f"stale window-bound allowlist entries: {stale}"
 
 
 def test_window_classifier_flags_raw_and_accepts_bounded(spark):
     """Proof-case for the classifier itself: a global cumsum directly over
     raw lineitem rows must classify as needs-argument, while the same
     band above a LIMIT or a scalar aggregate must auto-bound."""
-    from tests.windowaudit import AUTO_BOUNDED, global_windows
-
-    from aetherium_trader_datapipeline_spark.tables import load_tables
-
     load_tables(spark, SF_DIR)
 
     def statuses(sql: str) -> set[str]:
-        return {w["status"] for w in global_windows(spark.sql(sql))}
+        return {w["status"] for w in plan_findings(spark.sql(sql))["windows"]}
 
     raw = statuses(
         "SELECT SUM(l_quantity) OVER (ORDER BY l_orderkey, l_linenumber "

@@ -5,9 +5,9 @@ PARTITION BY moves its ENTIRE input relation through one task.  Harmless
 when the input is provably tiny (a LIMIT 1000 top-k, a scalar aggregate,
 a bounded chunk grid), catastrophic when it is corpus-sized.
 
-Used by the standing pytest gate (tests/test_plan_audit.py) and by the
-survey tool (scripts/window_audit.py).  Classification walks the compiled
-sparkPlan (pre-exchange) tree via py4j:
+Used by the standing pytest gate (tests/test_plan_audit.py), whose other
+plan checks walk the same py4j trees with ``walk``.  Classification walks
+the compiled sparkPlan (pre-exchange) operator tree:
 
 - ``bounded_by_limit``     — GlobalLimit / TakeOrderedAndProject /
   CollectLimit below the window: input <= the literal limit.
@@ -45,15 +45,33 @@ def _simple(node) -> str:
     return node.getClass().getSimpleName().replace("Exec", "")
 
 
-def _children(node):
-    seq = node.children()
+def _seq(seq) -> list:
     return [seq.apply(i) for i in range(seq.size())]
+
+
+def _children(node):
+    return _seq(node.children())
 
 
 def _walk(node):
     yield node
     for c in _children(node):
         yield from _walk(c)
+
+
+def walk(node, ancestors: tuple = ()):
+    """Pre-order ``(node, ancestors)`` over everything the plan's text
+    form prints, ``ancestors`` root first: unlike ``_walk`` it also
+    descends into nested plans (subqueries and cached relations, under
+    the node that holds them), and an AQE node stands for its initial
+    plan (the post-EnsureRequirements tree, with its Exchanges)."""
+    yield node, ancestors
+    if node.nodeName() == "AdaptiveSparkPlan":
+        kids = [node.initialPlan()]
+    else:
+        kids = _seq(node.innerChildren()) + _children(node)
+    for c in kids:
+        yield from walk(c, ancestors + (node,))
 
 
 def classify_window_input(window_node) -> dict:
