@@ -39,6 +39,22 @@ def _hadoop_fs(spark: SparkSession, path_str: str):
     return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
 
 
+def reject_stream_sink_root(spark: SparkSession, root_path: str) -> None:
+    """Refuse a batch overwrite of a root that Spark's streaming file sink
+    writes.  Readers of such a root list only the files named in its
+    ``_spark_metadata`` log: a batch-written partition there is never read,
+    and a dynamic overwrite deletes files the log still lists, so every
+    later read fails with FILE_NOT_EXIST."""
+    fs, root = _hadoop_fs(spark, root_path)
+    log = spark._jvm.org.apache.hadoop.fs.Path(root, "_spark_metadata")
+    if fs.exists(log):
+        raise ValueError(
+            f"{log.toString()} exists: {root_path} is written by a streaming "
+            "file sink, whose readers skip batch-written files and fail on "
+            "files a batch overwrite deletes"
+        )
+
+
 def _catalog_utils(spark: SparkSession):
     """Spark's own partition-path escaping (ExternalCatalogUtils): a raw
     f-string path like ``d=2024-01-01 10:00:00`` misses the on-disk
@@ -322,6 +338,7 @@ def compact_partitions(
     not exact file sizes; a caller needing tighter sizing should weight
     the budget per partition by estimated bytes/row from the listing.
     """
+    reject_stream_sink_root(spark, table_path)
     sizes = _partition_sizes(spark, table_path, partition_col)
     if partitions is not None:
         want = {None if p is None else str(p) for p in partitions}

@@ -79,7 +79,7 @@ SELECT l_orderkey, l_linenumber,
        ROUND(try_divide(l_extendedprice, l_linenumber - 1), 4) AS div_maybe,
        try_cast(CONCAT('x', CAST(l_orderkey AS STRING)) AS INT) AS bad_int,
        try_add(l_orderkey, 1) AS ok_add
-FROM x116_lineitem_rep ORDER BY l_orderkey, l_linenumber LIMIT 200
+FROM {lineitem_rep} ORDER BY l_orderkey, l_linenumber LIMIT 200
 """
 
 _X116_DUCK = """
@@ -96,8 +96,7 @@ FROM lineitem ORDER BY l_orderkey, l_linenumber LIMIT 200
 def x116_try_fns(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     p = spark.sparkContext.defaultParallelism * 2
-    t["lineitem"].repartition(p).createOrReplaceTempView("x116_lineitem_rep")
-    return spark.sql(_X116_SPARK)
+    return spark.sql(_X116_SPARK, lineitem_rep=t["lineitem"].repartition(p))
 
 # -- bitmap exact distinct count: the scale path for COUNT(DISTINCT) -------
 # Two-level bucket/position form is exact for arbitrary key ranges and

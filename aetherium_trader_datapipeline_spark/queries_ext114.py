@@ -208,7 +208,7 @@ def x417_event_study_car(spark, sf_dir):
     unique.  (2) becomes an 8-offset probe explode + equi-join on (sym,
     mkey = news.mkey + d), d in -2..5 — exactly the inclusive integer
     band.  DuckDB oracle textually unchanged."""
-    load_tables(spark, sf_dir)["events"].createOrReplaceTempView("events")
+    load_tables(spark, sf_dir)
     last_px = spark.sql(
         """
     WITH ticks AS (
@@ -221,10 +221,9 @@ def x417_event_study_car(spark, sf_dir):
            MAX_BY(px, named_struct('ts', ts, 'event_id', event_id)) AS px
     FROM ticks GROUP BY sym, mkey"""
     ).localCheckpoint()
-    last_px.createOrReplaceTempView("x417_last_px")
     return spark.sql(
         """
-    WITH last_px AS (SELECT sym, mkey, px FROM x417_last_px),
+    WITH last_px AS (SELECT sym, mkey, px FROM {last_px}),
     rets AS (
       SELECT sym, mkey,
              CAST(FLOOR(LN(CAST(px AS DOUBLE)
@@ -266,5 +265,6 @@ def x417_event_study_car(spark, sf_dir):
            ROUND(CAST(SUM(mean_ar_fp)
                       OVER (PARTITION BY sym ORDER BY rel) AS DOUBLE)
                  / 1e12, 9) AS car
-    FROM per_rel ORDER BY sym, rel_minute"""
+    FROM per_rel ORDER BY sym, rel_minute""",
+        last_px=last_px,
     )

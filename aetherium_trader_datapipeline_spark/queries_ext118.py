@@ -144,42 +144,42 @@ def x428_hits_scores(spark, sf_dir):
     final join — 7 documents scans, 42 exchanges in one plan.
     Checkpointing postings, a1 and a2 runs the corpus pass ONCE; all
     expressions and the DuckDB oracle are textually unchanged."""
-    load_tables(spark, sf_dir)["documents"].createOrReplaceTempView(
-        "documents"
-    )
+    load_tables(spark, sf_dir)
     postings = spark.sql(
         f"""
     WITH tok AS ({_TOK_SPARK})
     SELECT DISTINCT doc_id, term FROM tok"""
     ).localCheckpoint()
-    postings.createOrReplaceTempView("x428_postings")
     a1 = spark.sql(
         """
-      SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM x428_postings
-      GROUP BY term"""
+      SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM {postings}
+      GROUP BY term""",
+        postings=postings,
     ).localCheckpoint()
-    a1.createOrReplaceTempView("x428_a1")
     a2 = spark.sql(
         """
     WITH h1 AS (
       SELECT p.doc_id, CAST(SUM(a1.df) AS BIGINT) AS hub
-      FROM x428_postings p JOIN x428_a1 a1 ON p.term = a1.term
+      FROM {postings} p JOIN {a1} a1 ON p.term = a1.term
       GROUP BY p.doc_id
     )
     SELECT p.term, CAST(SUM(h1.hub) AS BIGINT) AS auth
-    FROM x428_postings p JOIN h1 ON p.doc_id = h1.doc_id GROUP BY p.term"""
+    FROM {postings} p JOIN h1 ON p.doc_id = h1.doc_id GROUP BY p.term""",
+        postings=postings,
+        a1=a1,
     ).localCheckpoint()
-    a2.createOrReplaceTempView("x428_a2")
     return spark.sql(
         """
     WITH mx AS (
-      SELECT CAST(MAX(auth) AS BIGINT) AS max_auth FROM x428_a2
+      SELECT CAST(MAX(auth) AS BIGINT) AS max_auth FROM {a2}
     )
     SELECT a2.term, a1.df, a2.auth AS authority_score,
            ROUND(CAST(a2.auth AS DOUBLE) / mx.max_auth, 6)
              AS authority_norm
-    FROM x428_a2 a2 JOIN x428_a1 a1 ON a2.term = a1.term CROSS JOIN mx
-    ORDER BY a2.auth DESC, a2.term LIMIT 20"""
+    FROM {a2} a2 JOIN {a1} a1 ON a2.term = a1.term CROSS JOIN mx
+    ORDER BY a2.auth DESC, a2.term LIMIT 20""",
+        a1=a1,
+        a2=a2,
     )
 
 # -- x429: edge-cut of a hash-sharded placement -----------------------------------

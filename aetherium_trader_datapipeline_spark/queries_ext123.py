@@ -96,7 +96,7 @@ register_sql(
 
 # r14: the Spark side materializes the tiny lp frame (last log-price per
 # (sym, minute) — one events scan + one window) into an eagerly
-# checkpointed temp view; CTE inlining otherwise re-ran that scan+window
+# checkpointed DataFrame; CTE inlining otherwise re-ran that scan+window
 # once per self-join side (2.1 s -> ~1.2 s at sf0.1).  The oracle keeps
 # the original single-statement text.
 _X443_LP = """
@@ -223,7 +223,7 @@ _X443_SPARK = _X443.format(
         FROM ticks
       ) t WHERE rn = 1
     ),""",
-    "lp AS (SELECT * FROM x443_lp),",
+    "lp AS (SELECT * FROM {lp}),",
 )
 
 
@@ -239,8 +239,7 @@ def x443_pairs_backtest(spark, sf_dir):
 
     load_tables(spark, sf_dir)
     lp = spark.sql(_X443_LP.format(intdiv="DIV", epoch="unix_seconds(ts)"))
-    lp.localCheckpoint(eager=True).createOrReplaceTempView("x443_lp")
-    return spark.sql(_X443_SPARK)
+    return spark.sql(_X443_SPARK, lp=lp.localCheckpoint(eager=True))
 
 # -- x444: embedding isotropy ---------------------------------------------------------
 

@@ -141,9 +141,7 @@ def x447_rrf_fusion(spark, sf_dir):
     and `cch` are checkpointed once; the two-list chunked-rank tail reads
     the small checkpoints.  19 documents scans -> 2 (token pass + the
     corpus-count scalar / n_chars join)."""
-    load_tables(spark, sf_dir)["documents"].createOrReplaceTempView(
-        "documents"
-    )
+    load_tables(spark, sf_dir)
     tf = spark.sql(
         f"""
     WITH tok AS ({_TOK_SPARK})
@@ -151,33 +149,32 @@ def x447_rrf_fusion(spark, sf_dir):
     FROM tok WHERE term IN ('table', 'value', 'row')
     GROUP BY doc_id, term"""
     ).localCheckpoint()
-    tf.createOrReplaceTempView("x447_tf")
     cand = spark.sql(
         """
     WITH lex AS (
       SELECT t.doc_id,
              CAST(SUM(t.tf * i.idf_fp) AS BIGINT) AS lex_fp
-      FROM x447_tf t
+      FROM {tf} t
       JOIN (
         SELECT term,
                CAST(FLOOR(LN((CAST((SELECT COUNT(*) FROM documents)
                               AS DOUBLE) + 1.0) / (COUNT(*)
                               + 1.0)) * 1e9) AS BIGINT) AS idf_fp
-        FROM x447_tf
+        FROM {tf}
         GROUP BY term
       ) i ON t.term = i.term
       GROUP BY t.doc_id
     )
     SELECT l.doc_id, l.lex_fp, d.n_chars
-    FROM lex l JOIN documents d ON l.doc_id = d.doc_id"""
+    FROM lex l JOIN documents d ON l.doc_id = d.doc_id""",
+        tf=tf,
     ).localCheckpoint()
-    cand.createOrReplaceTempView("x447_cand")
     cch = spark.sql(
         """
     WITH bounds AS (
       SELECT MIN(lex_fp) AS llo, MAX(lex_fp) AS lhi,
              MIN(n_chars) AS mlo, MAX(n_chars) AS mhi
-      FROM x447_cand
+      FROM {cand}
     )
     SELECT c.doc_id, c.lex_fp, c.n_chars,
            CASE WHEN b.lhi = b.llo THEN CAST(0 AS BIGINT)
@@ -188,9 +185,9 @@ def x447_rrf_fusion(spark, sf_dir):
                 ELSE LEAST(CAST(FLOOR(CAST(b.mhi - c.n_chars AS DOUBLE)
                                 * 1000 / CAST(b.mhi - b.mlo AS DOUBLE))
                                 AS BIGINT), CAST(999 AS BIGINT)) END AS ckm
-    FROM x447_cand c CROSS JOIN bounds b"""
+    FROM {cand} c CROSS JOIN bounds b""",
+        cand=cand,
     ).localCheckpoint()
-    cch.createOrReplaceTempView("x447_cch")
     return spark.sql(
         """
     WITH wrk AS (
@@ -199,20 +196,20 @@ def x447_rrf_fusion(spark, sf_dir):
                                 ORDER BY lex_fp DESC, doc_id) AS rl_in,
              ROW_NUMBER() OVER (PARTITION BY ckm
                                 ORDER BY n_chars DESC, doc_id) AS rm_in
-      FROM x447_cch
+      FROM {cch}
     ),
     lg AS (
       SELECT ckl, COALESCE(SUM(c) OVER (ORDER BY ckl
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
                CAST(0 AS BIGINT)) AS off
-      FROM (SELECT ckl, CAST(COUNT(*) AS BIGINT) AS c FROM x447_cch
+      FROM (SELECT ckl, CAST(COUNT(*) AS BIGINT) AS c FROM {cch}
             GROUP BY ckl)
     ),
     mg AS (
       SELECT ckm, COALESCE(SUM(c) OVER (ORDER BY ckm
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
                CAST(0 AS BIGINT)) AS off
-      FROM (SELECT ckm, CAST(COUNT(*) AS BIGINT) AS c FROM x447_cch
+      FROM (SELECT ckm, CAST(COUNT(*) AS BIGINT) AS c FROM {cch}
             GROUP BY ckm)
     ),
     fused AS (
@@ -229,7 +226,8 @@ def x447_rrf_fusion(spark, sf_dir):
            rank_lex,
            rank_meta,
            ROUND(rrf_fp / 1e12, 9) AS rrf_score
-    FROM fused ORDER BY rrf_fp DESC, doc_id LIMIT 10"""
+    FROM fused ORDER BY rrf_fp DESC, doc_id LIMIT 10""",
+        cch=cch,
     )
 
 # -- x448: Simpson's paradox detector --------------------------------------------------

@@ -150,7 +150,7 @@ def x460_epps_effect(spark, sf_dir):
     winner, event_id unique — checkpointed once; the per-(sym, f, bkey)
     last close = MAX_BY(cl, mkey) (mkey unique within sym in bars);
     `rets` checkpointed once, the correlation tail reads it twice."""
-    load_tables(spark, sf_dir)["events"].createOrReplaceTempView("events")
+    load_tables(spark, sf_dir)
     bars = spark.sql(
         """
     WITH ticks AS (
@@ -163,13 +163,12 @@ def x460_epps_effect(spark, sf_dir):
            MAX_BY(px, named_struct('ts', ts, 'event_id', event_id)) AS cl
     FROM ticks GROUP BY sym, mkey"""
     ).localCheckpoint()
-    bars.createOrReplaceTempView("x460_bars")
     rets = spark.sql(
         """
     WITH freqs AS (SELECT 1 AS f UNION ALL SELECT 10),
     sampled AS (
       SELECT b.sym, fr.f, b.mkey DIV fr.f AS bkey, b.mkey, b.cl
-      FROM x460_bars b CROSS JOIN freqs fr
+      FROM {bars} b CROSS JOIN freqs fr
     ),
     lastpx AS (
       SELECT sym, f, bkey, MAX_BY(cl, mkey) AS cl
@@ -180,14 +179,14 @@ def x460_epps_effect(spark, sf_dir):
                          / CAST(LAG(cl) OVER (PARTITION BY sym, f
                                               ORDER BY bkey) AS DOUBLE))
                       * 1e9) AS BIGINT) AS r_fp
-    FROM lastpx"""
+    FROM lastpx""",
+        bars=bars,
     ).localCheckpoint()
-    rets.createOrReplaceTempView("x460_rets")
     return spark.sql(
         """
     WITH aligned AS (
       SELECT a.f, a.sym AS sa, b.sym AS sb, a.r_fp AS ra, b.r_fp AS rb
-      FROM x460_rets a JOIN x460_rets b
+      FROM {rets} a JOIN {rets} b
         ON a.f = b.f AND a.bkey = b.bkey AND a.sym < b.sym
       WHERE a.r_fp IS NOT NULL AND b.r_fp IS NOT NULL
     ),
@@ -210,7 +209,8 @@ def x460_epps_effect(spark, sf_dir):
                    / SQRT(CAST(n * s11 - s1 * s1 AS DOUBLE)
                           * CAST(n * s22 - s2 * s2 AS DOUBLE)), 6)
            END AS corr
-    FROM moms WHERE n > 10 ORDER BY sym_a, sym_b, interval_minutes"""
+    FROM moms WHERE n > 10 ORDER BY sym_a, sym_b, interval_minutes""",
+        rets=rets,
     )
 
 # -- x461: volatility signature plot ---------------------------------------------------------

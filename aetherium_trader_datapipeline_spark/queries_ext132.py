@@ -304,29 +304,29 @@ def x470_selectivity_error(spark, sf_dir):
     10, depth_bounds 9, truth 5) runs the orders scan once per distinct
     aggregate (4 scans total); the estimator tail reads the checkpoints.
     All expressions and the DuckDB oracle are textually unchanged."""
-    load_tables(spark, sf_dir)["orders"].createOrReplaceTempView("orders")
+    load_tables(spark, sf_dir)
     stats = spark.sql(
         """
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
              MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi
       FROM orders"""
     ).localCheckpoint()
-    stats.createOrReplaceTempView("x470_stats")
-    # width_hist / depth_bounds stay VIEWS: each is referenced once by the
-    # tail, so checkpointing them only serializes jobs (measured 0.79x);
-    # only `stats` — re-expanded by width_hist and three depth_est
-    # references — is worth pinning.
-    spark.sql(
+    # width_hist / depth_bounds stay unmaterialized DataFrames: each is
+    # referenced once by the tail, so checkpointing them only serializes
+    # jobs (measured 0.79x); only `stats` — re-expanded by width_hist and
+    # three depth_est references — is worth pinning.
+    width_hist = spark.sql(
         """
       SELECT LEAST(CAST(FLOOR((o.o_totalprice - s.lo) / (s.hi - s.lo) * 10)
                         AS BIGINT), 9) AS b,
              CAST(COUNT(*) AS BIGINT) AS c,
              MAX(s.lo) AS lo, MAX(s.hi) AS hi
-      FROM orders o CROSS JOIN (SELECT * FROM x470_stats LIMIT 1) s
+      FROM orders o CROSS JOIN (SELECT * FROM {stats} LIMIT 1) s
       GROUP BY LEAST(CAST(FLOOR((o.o_totalprice - s.lo) / (s.hi - s.lo) * 10)
-                          AS BIGINT), 9)"""
-    ).createOrReplaceTempView("x470_width_hist")
-    spark.sql(
+                          AS BIGINT), 9)""",
+        stats=stats,
+    )
+    depth_bounds = spark.sql(
         """
       SELECT d.idx, MIN(CASE WHEN r.cum * 10 >= d.idx * r.n
                              THEN r.v END) AS v
@@ -339,10 +339,10 @@ def x470_selectivity_error(spark, sf_dir):
             UNION ALL SELECT 4 UNION ALL SELECT 5 UNION ALL SELECT 6
             UNION ALL SELECT 7 UNION ALL SELECT 8 UNION ALL SELECT 9) d
       GROUP BY d.idx"""
-    ).createOrReplaceTempView("x470_depth_bounds")
+    )
     return spark.sql(
         """
-    WITH stats AS (SELECT n, lo, hi FROM x470_stats LIMIT 1),
+    WITH stats AS (SELECT n, lo, hi FROM {stats} LIMIT 1),
     preds AS (
       SELECT 'p1_low20' AS pred, 20000.0 AS a, 60000.0 AS b
       UNION ALL SELECT 'p2_mid', 80000.0, 120000.0
@@ -363,7 +363,7 @@ def x470_selectivity_error(spark, sf_dir):
                LEAST(p.b, w.lo + (w.b + 1) * (w.hi - w.lo) / 10)
                - GREATEST(p.a, w.lo + w.b * (w.hi - w.lo) / 10))
                / ((w.hi - w.lo) / 10) * 1e6) AS BIGINT)) AS BIGINT) AS est_fp
-      FROM x470_width_hist w CROSS JOIN preds p GROUP BY p.pred
+      FROM {width_hist} w CROSS JOIN preds p GROUP BY p.pred
     ),
     depth_est AS (
       SELECT p.pred,
@@ -375,7 +375,7 @@ def x470_selectivity_error(spark, sf_dir):
         SELECT COALESCE(LAG(v) OVER (ORDER BY idx), (SELECT lo FROM stats))
                  AS l,
                v AS u
-        FROM (SELECT idx, v FROM x470_depth_bounds
+        FROM (SELECT idx, v FROM {depth_bounds}
               UNION ALL
               SELECT 10, (SELECT hi FROM stats)) all_b
       ) span
@@ -394,5 +394,8 @@ def x470_selectivity_error(spark, sf_dir):
     FROM truth t
     JOIN width_est we ON t.pred = we.pred
     JOIN depth_est de ON t.pred = de.pred
-    ORDER BY t.pred"""
+    ORDER BY t.pred""",
+        stats=stats,
+        width_hist=width_hist,
+        depth_bounds=depth_bounds,
     )

@@ -125,8 +125,7 @@ def x471_char_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = partials.groupBy("source", "pair_code").agg(
         F.sum("cp").cast("long").alias("cp")
     )
-    cells.createOrReplaceTempView("x471_cells")
-    # r13: the old c1_counts/totals CTEs referenced x471_cells three times
+    # r13: the old c1_counts/totals CTEs referenced `cells` three times
     # (p, c1_counts, totals) and CTE inlining re-ran the whole
     # scan -> mapInPandas -> groupBy subtree per reference — the plan
     # showed 3 MapInPandas nodes and 9 exchanges (guide §2.4, §4).  The
@@ -143,7 +142,7 @@ def x471_char_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                  CAST(SUM(cp) OVER (PARTITION BY source, pair_code DIV 1114112)
                       AS BIGINT) AS c1n,
                  CAST(SUM(cp) OVER (PARTITION BY source) AS BIGINT) AS n
-          FROM x471_cells
+          FROM {cells}
         ),
         terms AS (
           SELECT source,
@@ -156,7 +155,8 @@ def x471_char_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                ROUND(CAST(SUM(h_fp) AS DOUBLE) / 1e12, 6)
                  AS bigram_cond_entropy_nats
         FROM terms GROUP BY source ORDER BY source
-        """
+        """,
+        cells=cells,
     )
 
 # -- x472: closed-form 2-D PCA -------------------------------------------------------------

@@ -136,7 +136,7 @@ def x477_granger_causality(spark, sf_dir):
     untouched: lastpx = MAX_BY(px, struct(ts, event_id)) — identical
     winner, event_id unique — and `lagged` checkpointed once; the
     two-regressor OLS tail reads the checkpoint twice."""
-    load_tables(spark, sf_dir)["events"].createOrReplaceTempView("events")
+    load_tables(spark, sf_dir)
     lagged = spark.sql(
         """
     WITH ticks AS (
@@ -162,13 +162,12 @@ def x477_granger_causality(spark, sf_dir):
            LAG(r) OVER (PARTITION BY sym ORDER BY mkey) AS r_own_lag
     FROM rets WHERE r IS NOT NULL"""
     ).localCheckpoint()
-    lagged.createOrReplaceTempView("x477_lagged")
     return spark.sql(
         """
     WITH paired AS (
       SELECT b.sym AS sb, a.sym AS sa, b.r AS y,
              b.r_own_lag AS x1, a.r_own_lag AS x2
-      FROM x477_lagged b JOIN x477_lagged a
+      FROM {lagged} b JOIN {lagged} a
         ON a.mkey = b.mkey AND a.sym != b.sym
       WHERE b.r_own_lag IS NOT NULL AND a.r_own_lag IS NOT NULL
     ),
@@ -222,7 +221,8 @@ def x477_granger_causality(spark, sf_dir):
            CASE WHEN s2_scaled > 0
                  AND ABS(b2 / SQRT(s2_scaled * n * c11 / det)) > 1.96
                 THEN 1 ELSE 0 END AS granger_5pct
-    FROM tstat ORDER BY cause_sym, effect_sym"""
+    FROM tstat ORDER BY cause_sym, effect_sym""",
+        lagged=lagged,
     )
 
 # -- x478: binary-segmentation change point -----------------------------------------------

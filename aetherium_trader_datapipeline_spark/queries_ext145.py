@@ -210,13 +210,13 @@ def _x506_spark(spark, sf_dir):
     correlation join), donor_daily and treated_daily once each — so the
     ticks scan + per-(sym, minute) last-price window ran 8 times (8 events
     scans, 56 exchanges).  Materializing lastpx (one row per sym-minute)
-    and rets (same cardinality) as checkpointed temp views runs the events
+    and rets (same cardinality) as checkpointed DataFrames runs the events
     scan and the window ONCE; every downstream CTE is sym×minute-sized.
     All expressions are textually unchanged, so the DuckDB oracle
     (byte-identical) agrees row-for-row."""
     from aetherium_trader_datapipeline_spark.tables import load_tables
 
-    load_tables(spark, sf_dir)["events"].createOrReplaceTempView("events")
+    load_tables(spark, sf_dir)
     lastpx = spark.sql(
         """
     WITH ticks AS (
@@ -232,18 +232,17 @@ def _x506_spark(spark, sf_dir):
       FROM ticks
     ) t WHERE rn = 1"""
     ).localCheckpoint()
-    lastpx.createOrReplaceTempView("x506_lastpx")
     rets = spark.sql(
         """
-    WITH d0 AS (SELECT MIN(dkey) AS d0 FROM x506_lastpx)
+    WITH d0 AS (SELECT MIN(dkey) AS d0 FROM {lastpx})
     SELECT l.sym, l.mkey, l.dkey - d.d0 AS rel_day,
            CAST(FLOOR(LN(CAST(l.px AS DOUBLE)
                          / CAST(LAG(l.px) OVER (PARTITION BY l.sym
                                                 ORDER BY l.mkey)
                                 AS DOUBLE)) * 1e9) AS BIGINT) AS r
-    FROM x506_lastpx l CROSS JOIN d0 d"""
+    FROM {lastpx} l CROSS JOIN d0 d""",
+        lastpx=lastpx,
     ).localCheckpoint()
-    rets.createOrReplaceTempView("x506_rets")
     return spark.sql(
         """
     WITH pre_pair AS (
@@ -256,7 +255,7 @@ def _x506_spark(spark, sf_dir):
                AS s22,
              CAST(SUM(CAST(a.r AS DECIMAL(18,0)) * b.r) AS DECIMAL(38,0))
                AS s12
-      FROM x506_rets a JOIN x506_rets b
+      FROM {rets} a JOIN {rets} b
         ON a.mkey = b.mkey AND a.sym = 0 AND b.sym != 0
       WHERE a.rel_day < 15 AND a.r IS NOT NULL AND b.r IS NOT NULL
       GROUP BY b.sym
@@ -277,7 +276,7 @@ def _x506_spark(spark, sf_dir):
              CAST(SUM(CAST(w.w_fp AS DECIMAL(18,0)) * 1) AS DECIMAL(38,0))
                AS wtot_rows,
              CAST(COUNT(*) AS BIGINT) AS n_obs
-      FROM x506_rets r JOIN weights w ON r.sym = w.donor
+      FROM {rets} r JOIN weights w ON r.sym = w.donor
       WHERE r.r IS NOT NULL
       GROUP BY r.rel_day
     ),
@@ -285,7 +284,7 @@ def _x506_spark(spark, sf_dir):
       SELECT rel_day,
              CAST(SUM(r) AS BIGINT) AS tsum,
              CAST(COUNT(*) AS BIGINT) AS tn
-      FROM x506_rets WHERE sym = 0 AND r IS NOT NULL GROUP BY rel_day
+      FROM {rets} WHERE sym = 0 AND r IS NOT NULL GROUP BY rel_day
     ),
     gaps AS (
       SELECT t.rel_day,
@@ -300,7 +299,8 @@ def _x506_spark(spark, sf_dir):
            CAST(COUNT(*) AS BIGINT) AS n_days,
            ROUND(CAST(SUM(gap_fp) AS DOUBLE) / COUNT(*) / 1e9, 9)
              AS mean_gap_treated_vs_synthetic
-    FROM gaps GROUP BY post ORDER BY is_post_period"""
+    FROM gaps GROUP BY post ORDER BY is_post_period""",
+        rets=rets,
     )
 
 

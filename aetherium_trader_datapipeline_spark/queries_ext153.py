@@ -176,9 +176,7 @@ def x530_bag_set_ops(spark, sf_dir):
     everything.  n_distinct counts the qualifying groups with non-NULL
     f and s, exactly like COUNT(DISTINCT f || '|' || s).  DuckDB oracle
     textually unchanged."""
-    load_tables(spark, sf_dir)["lineitem"].createOrReplaceTempView(
-        "lineitem"
-    )
+    load_tables(spark, sf_dir)
     return spark.sql(
         """
     WITH g AS (

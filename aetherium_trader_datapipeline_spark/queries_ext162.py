@@ -194,69 +194,69 @@ def x553_textrank_keywords(spark, sf_dir):
     nodes and edges runs the corpus pass ONCE; the two unrolled PageRank
     iterations read the tiny (<=40x40) edge checkpoint.  All expressions
     and the DuckDB oracle are textually unchanged."""
-    load_tables(spark, sf_dir)["documents"].createOrReplaceTempView(
-        "documents"
-    )
+    load_tables(spark, sf_dir)
     postings = spark.sql(
         f"""
     WITH tok AS ({_TOK_SPARK})
     SELECT DISTINCT doc_id, term FROM tok"""
     ).localCheckpoint()
-    postings.createOrReplaceTempView("x553_postings")
     nodes = spark.sql(
         """
     WITH df AS (
       SELECT term, CAST(COUNT(*) AS BIGINT) AS df
-      FROM x553_postings GROUP BY term
+      FROM {postings} GROUP BY term
     ),
     vocab AS (
       SELECT term, df,
              ROW_NUMBER() OVER (ORDER BY df DESC, term) AS rk
       FROM df
     )
-    SELECT term, df FROM vocab WHERE rk <= 40"""
+    SELECT term, df FROM vocab WHERE rk <= 40""",
+        postings=postings,
     ).localCheckpoint()
-    nodes.createOrReplaceTempView("x553_nodes")
     edges = spark.sql(
         """
     WITH edge_docs AS (
-      SELECT doc_id, term FROM x553_postings WHERE doc_id % 10 = 0
+      SELECT doc_id, term FROM {postings} WHERE doc_id % 10 = 0
     )
     SELECT pa.term AS u, pb.term AS v,
            CAST(COUNT(*) AS BIGINT) AS w
     FROM edge_docs pa
     JOIN edge_docs pb
       ON pa.doc_id = pb.doc_id AND pa.term != pb.term
-    JOIN x553_nodes na ON pa.term = na.term
-    JOIN x553_nodes nb ON pb.term = nb.term
-    GROUP BY pa.term, pb.term"""
+    JOIN {nodes} na ON pa.term = na.term
+    JOIN {nodes} nb ON pb.term = nb.term
+    GROUP BY pa.term, pb.term""",
+        postings=postings,
+        nodes=nodes,
     ).localCheckpoint()
-    edges.createOrReplaceTempView("x553_edges")
     return spark.sql(
         """
     WITH wdeg AS (
-      SELECT u, CAST(SUM(w) AS BIGINT) AS wd FROM x553_edges GROUP BY u
+      SELECT u, CAST(SUM(w) AS BIGINT) AS wd FROM {edges} GROUP BY u
     ),
     pr1 AS (
       SELECT e.v AS term,
              150000 + 85 * CAST(SUM(e.w * 1000000 DIV d.wd)
                                 AS BIGINT) DIV 100 AS score
-      FROM x553_edges e JOIN wdeg d ON e.u = d.u
+      FROM {edges} e JOIN wdeg d ON e.u = d.u
       GROUP BY e.v
     ),
     pr2 AS (
       SELECT e.v AS term,
              150000 + 85 * CAST(SUM((e.w * p.score DIV d.wd))
                                 AS BIGINT) DIV 100 AS score
-      FROM x553_edges e
+      FROM {edges} e
       JOIN wdeg d ON e.u = d.u
       JOIN pr1 p ON e.u = p.term
       GROUP BY e.v
     )
     SELECT p.term, n.df, CAST(p.score AS BIGINT) AS textrank_fp,
            ROUND(p.score / 1e6, 6) AS textrank
-    FROM pr2 p JOIN x553_nodes n ON p.term = n.term
-    ORDER BY p.score DESC, p.term LIMIT 10"""
+    FROM pr2 p JOIN {nodes} n ON p.term = n.term
+    ORDER BY p.score DESC, p.term LIMIT 10""",
+        nodes=nodes,
+        edges=edges,
     )
 
 # -- x554: inspection paradox ---------------------------------------------------------------------
@@ -347,7 +347,7 @@ def x554_inspection_paradox(spark, sf_dir):
     sf0.1).  Checkpointing gaps runs that chain ONCE; the probe/covering
     tail reads the checkpoint.  All expressions and the DuckDB oracle
     are textually unchanged."""
-    load_tables(spark, sf_dir)["events"].createOrReplaceTempView("events")
+    load_tables(spark, sf_dir)
     gaps = spark.sql(
         """
     WITH ets AS (
@@ -374,10 +374,9 @@ def x554_inspection_paradox(spark, sf_dir):
           UNION ALL
           SELECT g_start, g_end FROM crossb WHERE g_start IS NOT NULL) u"""
     ).localCheckpoint()
-    gaps.createOrReplaceTempView("x554_gaps")
     return spark.sql(
         """
-    WITH gaps AS (SELECT g_start, g_end, len_s FROM x554_gaps),
+    WITH gaps AS (SELECT g_start, g_end, len_s FROM {gaps}),
     plain AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_gaps,
              CAST(SUM(len_s) AS BIGINT) AS s1,
@@ -408,5 +407,6 @@ def x554_inspection_paradox(spark, sf_dir):
                  / (CAST(pl.s1 AS DOUBLE) / pl.n_gaps), 4)
              AS inspection_inflation
     FROM covering c CROSS JOIN plain pl
-    GROUP BY pl.n_gaps, pl.s1, pl.s2"""
+    GROUP BY pl.n_gaps, pl.s1, pl.s2""",
+        gaps=gaps,
     )

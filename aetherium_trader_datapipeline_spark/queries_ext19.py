@@ -43,7 +43,7 @@ from aetherium_trader_datapipeline_spark.tables import load_tables
 # 1.0–1.4 s at sf0.1 on local[32].  Oracle text unchanged.
 _X162_SPARK = """
     WITH e AS (
-      SELECT vec_id, i, CAST(v AS DOUBLE) AS v FROM x162_emb_rep
+      SELECT vec_id, i, CAST(v AS DOUBLE) AS v FROM {emb_rep}
       LATERAL VIEW posexplode(embedding) t AS i, v)
     SELECT a.i AS di, b.i AS dj,
            ROUND(CAST(CAST(ROUND(SUM(CAST(a.v * b.v AS DECIMAL(38,18))), 6) AS DECIMAL(38,6)) AS DOUBLE), 6) AS dot
@@ -67,8 +67,7 @@ _X162_DUCK = """
 def x162_gram_matrix(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     p = spark.sparkContext.defaultParallelism * 2
-    t["embeddings"].repartition(p).createOrReplaceTempView("x162_emb_rep")
-    return spark.sql(_X162_SPARK)
+    return spark.sql(_X162_SPARK, emb_rep=t["embeddings"].repartition(p))
 
 # -- x163: ordered conversion funnel ----------------------------------------
 #

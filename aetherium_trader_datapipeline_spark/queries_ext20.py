@@ -104,9 +104,7 @@ def x167_containment(spark, sf_dir):
     plan.  Checkpointing sh once leaves every downstream join reading the
     small (doc_id, shingle) checkpoint; all expressions and the DuckDB
     oracle are textually unchanged."""
-    load_tables(spark, sf_dir)["documents"].createOrReplaceTempView(
-        "documents"
-    )
+    load_tables(spark, sf_dir)
     sh = spark.sql(
         """
       SELECT DISTINCT doc_id, array_join(slice(ws, i, 5), ' ') AS shingle
@@ -115,10 +113,9 @@ def x167_containment(spark, sf_dir):
       LATERAL VIEW explode(sequence(1, size(ws) - 4)) t AS i
       WHERE size(ws) >= 5"""
     ).localCheckpoint()
-    sh.createOrReplaceTempView("x167_sh")
     return spark.sql(
         """
-    WITH sh AS (SELECT doc_id, shingle FROM x167_sh),
+    WITH sh AS (SELECT doc_id, shingle FROM {sh}),
     sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
     rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) <= 50),
     cand AS (
@@ -134,7 +131,8 @@ def x167_containment(spark, sf_dir):
            ROUND(c / CAST(sz.n AS DOUBLE), 4) AS containment
     FROM inter JOIN sz ON inter.a = sz.doc_id
     WHERE c / CAST(sz.n AS DOUBLE) >= 0.5
-    ORDER BY containment DESC, a, b LIMIT 100"""
+    ORDER BY containment DESC, a, b LIMIT 100""",
+        sh=sh,
     )
 
 # -- x168: exact-dup keep-best policy ---------------------------------------

@@ -183,7 +183,7 @@ _X192_FMT = """
 # oracle text unchanged.
 _X192_SPARK = _X192_FMT.format(
     cast_vec="CAST(embedding AS ARRAY<DOUBLE>)", cos=_spark_cos("p.e", "c.e")
-).replace("FROM embeddings", "FROM x192_emb_rep")
+).replace("FROM embeddings", "FROM {emb_rep}")
 
 
 @register(
@@ -198,5 +198,4 @@ def x192_knn_classify(spark, sf_dir):
 
     t = load_tables(spark, sf_dir)
     p = spark.sparkContext.defaultParallelism * 2
-    t["embeddings"].repartition(p).createOrReplaceTempView("x192_emb_rep")
-    return spark.sql(_X192_SPARK)
+    return spark.sql(_X192_SPARK, emb_rep=t["embeddings"].repartition(p))

@@ -152,16 +152,13 @@ def x201_basket_pairs(spark, sf_dir):
     lineitem scans + 5 DISTINCT shuffles in one plan.  Checkpointing
     items runs the scan + dedup ONCE; the lift tail is textually
     unchanged, as is the DuckDB oracle."""
-    load_tables(spark, sf_dir)["lineitem"].createOrReplaceTempView(
-        "lineitem"
-    )
+    load_tables(spark, sf_dir)
     items = spark.sql(
         "SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem"
     ).localCheckpoint()
-    items.createOrReplaceTempView("x201_items")
     return spark.sql(
         """
-    WITH items AS (SELECT ok, pk FROM x201_items),
+    WITH items AS (SELECT ok, pk FROM {items}),
     pc AS (SELECT pk, CAST(COUNT(*) AS BIGINT) AS c FROM items GROUP BY pk),
     n AS (SELECT CAST(COUNT(DISTINCT ok) AS BIGINT) AS nords FROM items),
     pairs AS (
@@ -175,7 +172,8 @@ def x201_basket_pairs(spark, sf_dir):
     JOIN pc ca ON p.part_a = ca.pk
     JOIN pc cb ON p.part_b = cb.pk
     CROSS JOIN n
-    ORDER BY p.n_both DESC, p.part_a, p.part_b LIMIT 100"""
+    ORDER BY p.n_both DESC, p.part_a, p.part_b LIMIT 100""",
+        items=items,
     )
 
 # -- x202: session path mining (event-type trigrams) ------------------------

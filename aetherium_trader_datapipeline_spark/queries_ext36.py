@@ -175,7 +175,7 @@ def x210_rfm(spark, sf_dir):
     (PARTITION BY tag, ck) and the scores pivoted back — same ck formula,
     same closed form, exact DECIMAL(38,2) order keys; (3) shared frames
     are checkpointed.  30 events scans -> 1, 160 exchanges -> 14."""
-    load_tables(spark, sf_dir)["events"].createOrReplaceTempView("events")
+    load_tables(spark, sf_dir)
     # anchor = MAX(ts) = MAX over the per-user maxes, and rfm's GROUP BY
     # (user_id, a.mx) has a.mx constant — so this is the same relation as
     # `_x210_rfm_cte`.  per_user is inlined (the anchor branch re-runs the
@@ -195,7 +195,6 @@ def x210_rfm(spark, sf_dir):
              p.frequency, p.monetary
       FROM per_user p CROSS JOIN anchor a"""
     ).localCheckpoint()
-    rfm.createOrReplaceTempView("x210_rfm_base")
 
     # The three quintile pipelines are identical in shape and tiny per
     # stage at any one SF (the per-user relation), so running them as
@@ -230,31 +229,31 @@ def x210_rfm(spark, sf_dir):
              MIN(frequency) AS flo, MAX(frequency) AS fhi,
              MIN(monetary) AS mlo, MAX(monetary) AS mhi,
              CAST(COUNT(*) AS BIGINT) AS n
-      FROM x210_rfm_base)
+      FROM {{rfm}})
     SELECT t.user_id, s.n, x.tag, x.ck, x.okey
-    FROM x210_rfm_base t CROSS JOIN stats s
+    FROM {{rfm}} t CROSS JOIN stats s
     LATERAL VIEW explode(array(
       named_struct('tag', 'r', 'ck', {_ck("recency_days", "rlo", "rhi", True)},
                    'okey', CAST(-t.recency_days AS DECIMAL(38,2))),
       named_struct('tag', 'f', 'ck', {_ck("frequency", "flo", "fhi", False)},
                    'okey', CAST(t.frequency AS DECIMAL(38,2))),
       named_struct('tag', 'm', 'ck', {_ck("monetary", "mlo", "mhi", False)},
-                   'okey', CAST(t.monetary AS DECIMAL(38,2))))) e AS x"""
+                   'okey', CAST(t.monetary AS DECIMAL(38,2))))) e AS x""",
+        rfm=rfm,
     ).localCheckpoint()
-    stacked.createOrReplaceTempView("x210_stacked")
     return spark.sql(
         f"""
     WITH w AS (
       SELECT user_id, n, tag, ck,
              ROW_NUMBER() OVER (PARTITION BY tag, ck
                                 ORDER BY okey, user_id) AS r_in
-      FROM x210_stacked),
+      FROM {{stacked}}),
     g AS (
       SELECT tag, ck, COALESCE(SUM(c) OVER (PARTITION BY tag ORDER BY ck
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
                CAST(0 AS BIGINT)) AS off
       FROM (SELECT tag, ck, CAST(COUNT(*) AS BIGINT) AS c
-            FROM x210_stacked GROUP BY tag, ck)),
+            FROM {{stacked}} GROUP BY tag, ck)),
     scored AS (
       SELECT w.user_id,
              MAX(CASE WHEN w.tag = 'r' THEN {closed} END) AS r_score,
@@ -269,7 +268,8 @@ def x210_rfm(spark, sf_dir):
            CAST(COUNT(*) AS BIGINT) AS n_users
     FROM scored GROUP BY r_score, f_score, m_score
     ORDER BY r_score, f_score, m_score
-"""
+""",
+        stacked=stacked,
     )
 
 # -- x211: log2-bucketed histogram + bucket-boundary p99 --------------------

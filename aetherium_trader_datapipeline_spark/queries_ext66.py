@@ -132,9 +132,7 @@ def x291_winnowing_fingerprints(spark, sf_dir):
     leaves the scan job) and fp makes the hash pass run once; the band
     join and the overlap join read the small checkpoints.  Window/selection
     SQL is textually unchanged, as is the DuckDB oracle."""
-    from aetherium_trader_datapipeline_spark.tables import load_tables
-
-    load_tables(spark, sf_dir)["documents"].createOrReplaceTempView("documents")
+    load_tables(spark, sf_dir)
     h = _md5i_spark("substr(d.text, g.i, 5)", 1, 12)
     g = spark.sql(
         f"""
@@ -144,12 +142,11 @@ def x291_winnowing_fingerprints(spark, sf_dir):
       FROM documents WHERE doc_id <= 300 AND length(text) >= 5
     ) d LATERAL VIEW explode(sequence(1, d.npos)) g AS i"""
     ).localCheckpoint()
-    g.createOrReplaceTempView("x291_g")
     fp = spark.sql(
         """
     WITH win AS (
       SELECT a.doc_id, a.i AS s, b.i AS j, b.h
-      FROM x291_g a JOIN x291_g b
+      FROM {g} a JOIN {g} b
         ON a.doc_id = b.doc_id AND b.i >= a.i AND b.i <= a.i + 3
       WHERE a.i + 3 <= a.npos
     ),
@@ -160,15 +157,15 @@ def x291_winnowing_fingerprints(spark, sf_dir):
       ) z
       WHERE h = mh GROUP BY doc_id, s, mh
     )
-    SELECT DISTINCT doc_id, mh AS fp_hash FROM sel"""
+    SELECT DISTINCT doc_id, mh AS fp_hash FROM sel""",
+        g=g,
     ).localCheckpoint()
-    fp.createOrReplaceTempView("x291_fp")
     return spark.sql(
         """
-    WITH nfp AS (SELECT doc_id, COUNT(*) AS n FROM x291_fp GROUP BY doc_id),
+    WITH nfp AS (SELECT doc_id, COUNT(*) AS n FROM {fp} GROUP BY doc_id),
     pairs AS (
       SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS shared
-      FROM x291_fp a JOIN x291_fp b
+      FROM {fp} a JOIN {fp} b
         ON a.fp_hash = b.fp_hash AND a.doc_id < b.doc_id
       GROUP BY a.doc_id, b.doc_id
     )
@@ -180,7 +177,8 @@ def x291_winnowing_fingerprints(spark, sf_dir):
     JOIN nfp na ON na.doc_id = p.d1
     JOIN nfp nb ON nb.doc_id = p.d2
     WHERE p.shared >= 3
-    ORDER BY overlap_bp DESC, p.d1, p.d2 LIMIT 100"""
+    ORDER BY overlap_bp DESC, p.d1, p.d2 LIMIT 100""",
+        fp=fp,
     )
 
 # -- x292: BPE tokenizer training, two merge rounds --------------------------
@@ -291,56 +289,24 @@ _X292_CHR_DUCK = """
       ) z
 """
 
-@register(
-    "x292_bpe_merge_rounds",
-    oracle=_x292_sql(_X292_TOK_DUCK, _X292_CHR_DUCK),
-    tags=("text", "llm", "tokenizer"),
-)
-def x292_bpe_merge_rounds(spark, sf_dir):
-    """r14 restructure (guide §2.4): the recursive CTE chain seq0 -> pc1/
-    seq1 -> pc2/seq2 -> pc3 re-inlined every upstream round per reference
-    (pc{q} feeds both best{q} and the top-10 tail; m{q} re-expands
-    seq{p}) — 14 documents scans, 64 exchanges in one plan.  Running the
-    rounds iteratively with wf/seq{q}/pc{q} checkpointed runs the corpus
-    scan and each merge round ONCE; the `_bpe_round` window SQL is reused
-    textually round by round, and the DuckDB oracle is unchanged."""
-    load_tables(spark, sf_dir)["documents"].createOrReplaceTempView(
-        "documents"
-    )
-    wf = spark.sql(
-        f"""
-    WITH w0 AS ({_X292_TOK_SPARK})
-    SELECT word, COUNT(*) AS f FROM w0 WHERE length(word) > 0
-    GROUP BY word"""
-    ).localCheckpoint()
-    wf.createOrReplaceTempView("x292_wf")
-    seq = spark.sql(
-        _X292_CHR_SPARK.replace("FROM wf", "FROM x292_wf wf")
-    ).localCheckpoint()
-    seq.createOrReplaceTempView("x292_seq0")
-    pair_counts = """
+_BPE_PAIR_COUNTS = """
       SELECT t.s1, t.s2, SUM(w.f) AS cnt
       FROM (
         SELECT word, p, sym AS s1,
                LEAD(sym) OVER (PARTITION BY word ORDER BY p) AS s2
-        FROM x292_seq{p}
-      ) t JOIN x292_wf w ON t.word = w.word
+        FROM {seq}
+      ) t JOIN {wf} w ON t.word = w.word
       WHERE t.s2 IS NOT NULL GROUP BY t.s1, t.s2"""
-    for q in (1, 2):
-        p = q - 1
-        pc = spark.sql(pair_counts.format(p=p)).localCheckpoint()
-        pc.createOrReplaceTempView(f"x292_pc{q}")
-        seq = spark.sql(
-            f"""
+_BPE_MERGE = """
     WITH best AS (
-      SELECT s1, s2 FROM x292_pc{q} ORDER BY cnt DESC, s1, s2 LIMIT 1
+      SELECT s1, s2 FROM {pc} ORDER BY cnt DESC, s1, s2 LIMIT 1
     ),
     m AS (
       SELECT s.word, s.p, s.sym,
              CASE WHEN s.sym = b.s1
                    AND LEAD(s.sym) OVER (PARTITION BY s.word ORDER BY s.p) = b.s2
                   THEN 1 ELSE 0 END AS cand
-      FROM x292_seq{p} s CROSS JOIN best b
+      FROM {seq} s CROSS JOIN best b
     ),
     r AS (
       SELECT *, p - ROW_NUMBER() OVER (PARTITION BY word, cand ORDER BY p) AS grp
@@ -364,22 +330,58 @@ def x292_bpe_merge_rounds(spark, sf_dir):
     )
     SELECT word, ROW_NUMBER() OVER (PARTITION BY word ORDER BY p) AS p, sym
     FROM n WHERE consumed IS NULL OR consumed = 0"""
-        ).localCheckpoint()
-        seq.createOrReplaceTempView(f"x292_seq{q}")
-    pc3 = spark.sql(pair_counts.format(p=2)).localCheckpoint()
-    pc3.createOrReplaceTempView("x292_pc3")
+
+
+def _bpe_rounds(spark, sf_dir):
+    """Word table, symbol sequences after two merge rounds, and the round
+    1-2 pair counts (``pc1``/``pc2``), each checkpointed — shared by x292
+    and x300."""
+    load_tables(spark, sf_dir)
+    wf = spark.sql(
+        f"""
+    WITH w0 AS ({_X292_TOK_SPARK})
+    SELECT word, COUNT(*) AS f FROM w0 WHERE length(word) > 0
+    GROUP BY word"""
+    ).localCheckpoint()
+    seq = spark.sql(
+        _X292_CHR_SPARK.replace("FROM wf", "FROM {wf} wf"), wf=wf
+    ).localCheckpoint()
+    pcs = {}
+    for q in (1, 2):
+        pc = spark.sql(_BPE_PAIR_COUNTS, seq=seq, wf=wf).localCheckpoint()
+        pcs[f"pc{q}"] = pc
+        seq = spark.sql(_BPE_MERGE, pc=pc, seq=seq).localCheckpoint()
+    return wf, seq, pcs
+
+
+@register(
+    "x292_bpe_merge_rounds",
+    oracle=_x292_sql(_X292_TOK_DUCK, _X292_CHR_DUCK),
+    tags=("text", "llm", "tokenizer"),
+)
+def x292_bpe_merge_rounds(spark, sf_dir):
+    """r14 restructure (guide §2.4): the recursive CTE chain seq0 -> pc1/
+    seq1 -> pc2/seq2 -> pc3 re-inlined every upstream round per reference
+    (pc{q} feeds both best{q} and the top-10 tail; m{q} re-expands
+    seq{p}) — 14 documents scans, 64 exchanges in one plan.  Running the
+    rounds iteratively with wf/seq{q}/pc{q} checkpointed runs the corpus
+    scan and each merge round ONCE; the `_bpe_round` window SQL is reused
+    textually round by round, and the DuckDB oracle is unchanged."""
+    wf, seq, pcs = _bpe_rounds(spark, sf_dir)
+    pcs["pc3"] = spark.sql(_BPE_PAIR_COUNTS, seq=seq, wf=wf).localCheckpoint()
     top = """
       SELECT CAST({r} AS BIGINT) AS round, rk, s1, s2, pair_count FROM (
         SELECT s1, s2, CAST(cnt AS BIGINT) AS pair_count,
                CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, s1, s2) AS BIGINT) AS rk
-        FROM x292_pc{r}
+        FROM {{pc{r}}}
       ) t{r} WHERE rk <= 10"""
     return spark.sql(
         f"""
     SELECT * FROM ({top.format(r=1)}) a
     UNION ALL SELECT * FROM ({top.format(r=2)}) b
     UNION ALL SELECT * FROM ({top.format(r=3)}) c
-    ORDER BY round, rk"""
+    ORDER BY round, rk""",
+        **pcs,
     )
 
 # -- x293: sublinear per-domain cap ------------------------------------------
@@ -726,7 +728,7 @@ def x296_perplexity_buckets(spark, sf_dir):
     the idx+1 self-join), uni and vocab, and `docscore` feeds nb/dch (which
     dw and doff each re-expand) — 30 scans of documents and 122 exchanges
     in one plan.  Materializing the three natural boundaries (toks, uni,
-    docscore) as checkpointed temp views and pairing bigrams with LEAD over
+    docscore) as checkpointed DataFrames and pairing bigrams with LEAD over
     the dense posexplode index (identical pairs: idx is 0..n-1 consecutive,
     so b.idx = a.idx + 1 selects exactly the LEAD row) drops the plan to
     ONE documents scan; bc's per-(w1,w2) count becomes a window on the same
@@ -734,54 +736,51 @@ def x296_perplexity_buckets(spark, sf_dir):
     casts and the chunked-rank tail are textually unchanged, so the NTILE
     reconstruction and the DuckDB oracle (byte-identical) agree row-for-row.
     """
-    from aetherium_trader_datapipeline_spark.tables import load_tables
-
-    load_tables(spark, sf_dir)["documents"].createOrReplaceTempView("documents")
+    load_tables(spark, sf_dir)
     toks = spark.sql(
         """
       SELECT doc_id, idx, w FROM documents
       LATERAL VIEW posexplode(split(lower(text), ' ')) t AS idx, w"""
     ).localCheckpoint()
-    toks.createOrReplaceTempView("x296_toks")
     uni = spark.sql(
-        "SELECT w, COUNT(*) AS c FROM x296_toks GROUP BY w"
+        "SELECT w, COUNT(*) AS c FROM {toks} GROUP BY w", toks=toks
     ).localCheckpoint()
-    uni.createOrReplaceTempView("x296_uni")
     docscore = spark.sql(
         """
     WITH occ0 AS (
       SELECT doc_id, w AS w1,
              LEAD(w) OVER (PARTITION BY doc_id ORDER BY idx) AS w2
-      FROM x296_toks),
+      FROM {toks}),
     occ AS (
       SELECT doc_id, w1, w2,
              COUNT(*) OVER (PARTITION BY w1, w2) AS c
       FROM occ0 WHERE w2 IS NOT NULL),
-    vocab AS (SELECT COUNT(*) AS v FROM x296_uni),
+    vocab AS (SELECT COUNT(*) AS v FROM {uni}),
     scored AS (
       SELECT occ.doc_id,
              CAST(log2(CAST(occ.c + 1 AS DOUBLE) / (uni.c + vocab.v))
                   AS DECIMAL(18,9)) AS lp
       FROM occ
-      JOIN x296_uni uni ON occ.w1 = uni.w
+      JOIN {uni} uni ON occ.w1 = uni.w
       CROSS JOIN vocab)
     SELECT doc_id,
            CAST(ROUND(-CAST(SUM(lp) AS DOUBLE) / COUNT(*), 4)
                 AS DECIMAL(18,6)) AS nll
-    FROM scored GROUP BY doc_id"""
+    FROM scored GROUP BY doc_id""",
+        toks=toks,
+        uni=uni,
     ).localCheckpoint()
-    docscore.createOrReplaceTempView("x296_docscore")
     return spark.sql(
         """
     WITH nb AS (SELECT MIN(nll) AS lo, MAX(nll) AS hi,
-                  CAST(COUNT(*) AS BIGINT) AS n FROM x296_docscore),
+                  CAST(COUNT(*) AS BIGINT) AS n FROM {docscore}),
     dch AS (
       SELECT d.doc_id, d.nll,
              CASE WHEN b.hi = b.lo THEN CAST(0 AS BIGINT)
                   ELSE LEAST(CAST(FLOOR(CAST(d.nll - b.lo AS DOUBLE) * 1000
                                         / CAST(b.hi - b.lo AS DOUBLE))
                                   AS BIGINT), CAST(999 AS BIGINT)) END AS ck
-      FROM x296_docscore d CROSS JOIN nb b),
+      FROM {docscore} d CROSS JOIN nb b),
     dw AS (
       SELECT doc_id, nll, ck,
              ROW_NUMBER() OVER (PARTITION BY ck ORDER BY nll, doc_id)
@@ -810,5 +809,6 @@ def x296_perplexity_buckets(spark, sf_dir):
            CAST(MIN(nll) AS DOUBLE) AS min_nll,
            CAST(MAX(nll) AS DOUBLE) AS max_nll,
            ROUND(CAST(SUM(nll) AS DOUBLE) / COUNT(*), 4) AS avg_nll
-    FROM bucketed GROUP BY bucket ORDER BY bucket"""
+    FROM bucketed GROUP BY bucket ORDER BY bucket""",
+        docscore=docscore,
     )

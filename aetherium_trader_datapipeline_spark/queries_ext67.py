@@ -41,10 +41,9 @@ from aetherium_trader_datapipeline_spark.queries import register, register_sql
 from aetherium_trader_datapipeline_spark.queries_ext14 import _X129_CTES
 from aetherium_trader_datapipeline_spark.queries_ext66 import (
     _X292_CHR_DUCK,
-    _X292_CHR_SPARK,
     _X292_TOK_DUCK,
-    _X292_TOK_SPARK,
     _bpe_round,
+    _bpe_rounds,
 )
 from aetherium_trader_datapipeline_spark.tables import load_tables
 
@@ -265,88 +264,27 @@ def x300_bpe_compression(spark, sf_dir):
     """r14 restructure (guide §2.4): same CTE-inlining blowup as x292
     (whose merge-round machinery this key extends) — 15 documents scans,
     74 exchanges.  Runs the two BPE rounds iteratively with wf/seq{q}/
-    pc{q} checkpointed (the x292 device, x300-prefixed views), then the
-    payoff accounting reads the checkpoints; oracle unchanged."""
-    load_tables(spark, sf_dir)["documents"].createOrReplaceTempView(
-        "documents"
-    )
-    wf = spark.sql(
-        f"""
-    WITH w0 AS ({_X292_TOK_SPARK})
-    SELECT word, COUNT(*) AS f FROM w0 WHERE length(word) > 0
-    GROUP BY word"""
-    ).localCheckpoint()
-    wf.createOrReplaceTempView("x300_wf")
-    seq = spark.sql(
-        _X292_CHR_SPARK.replace("FROM wf", "FROM x300_wf wf")
-    ).localCheckpoint()
-    seq.createOrReplaceTempView("x300_seq0")
-    pair_counts = """
-      SELECT t.s1, t.s2, SUM(w.f) AS cnt
-      FROM (
-        SELECT word, p, sym AS s1,
-               LEAD(sym) OVER (PARTITION BY word ORDER BY p) AS s2
-        FROM x300_seq{p}
-      ) t JOIN x300_wf w ON t.word = w.word
-      WHERE t.s2 IS NOT NULL GROUP BY t.s1, t.s2"""
-    for q in (1, 2):
-        p = q - 1
-        pc = spark.sql(pair_counts.format(p=p)).localCheckpoint()
-        pc.createOrReplaceTempView(f"x300_pc{q}")
-        seq = spark.sql(
-            f"""
-    WITH best AS (
-      SELECT s1, s2 FROM x300_pc{q} ORDER BY cnt DESC, s1, s2 LIMIT 1
-    ),
-    m AS (
-      SELECT s.word, s.p, s.sym,
-             CASE WHEN s.sym = b.s1
-                   AND LEAD(s.sym) OVER (PARTITION BY s.word ORDER BY s.p) = b.s2
-                  THEN 1 ELSE 0 END AS cand
-      FROM x300_seq{p} s CROSS JOIN best b
-    ),
-    r AS (
-      SELECT *, p - ROW_NUMBER() OVER (PARTITION BY word, cand ORDER BY p) AS grp
-      FROM m
-    ),
-    mm AS (
-      SELECT *,
-             CASE WHEN cand = 1
-                   AND ROW_NUMBER() OVER (PARTITION BY word, cand, grp ORDER BY p) % 2 = 1
-                  THEN 1 ELSE 0 END AS do_merge
-      FROM r
-    ),
-    n AS (
-      SELECT word, p,
-             CASE WHEN do_merge = 1 THEN sym || next_sym ELSE sym END AS sym,
-             LAG(do_merge) OVER (PARTITION BY word ORDER BY p) AS consumed
-      FROM (
-        SELECT *, LEAD(sym) OVER (PARTITION BY word ORDER BY p) AS next_sym
-        FROM mm
-      ) z
-    )
-    SELECT word, ROW_NUMBER() OVER (PARTITION BY word ORDER BY p) AS p, sym
-    FROM n WHERE consumed IS NULL OR consumed = 0"""
-        ).localCheckpoint()
-        seq.createOrReplaceTempView(f"x300_seq{q}")
+    pc{q} checkpointed (x292's `_bpe_rounds`), then the payoff accounting
+    reads the checkpoints; oracle unchanged."""
+    wf, seq2, pcs = _bpe_rounds(spark, sf_dir)
     return spark.sql(
         """
     WITH best1 AS (
-      SELECT s1, s2 FROM x300_pc1 ORDER BY cnt DESC, s1, s2 LIMIT 1
+      SELECT s1, s2 FROM {pc1} ORDER BY cnt DESC, s1, s2 LIMIT 1
     ),
     best2 AS (
-      SELECT s1, s2 FROM x300_pc2 ORDER BY cnt DESC, s1, s2 LIMIT 1
+      SELECT s1, s2 FROM {pc2} ORDER BY cnt DESC, s1, s2 LIMIT 1
     ),
     tot0 AS (
       SELECT CAST(SUM(length(word) * f) AS BIGINT) AS syms0,
              CAST(SUM(f) AS BIGINT) AS n_words,
              CAST(COUNT(*) AS BIGINT) AS n_distinct_words
-      FROM x300_wf
+      FROM {wf}
     ),
-    len2 AS (SELECT word, MAX(p) AS l2 FROM x300_seq2 GROUP BY word),
+    len2 AS (SELECT word, MAX(p) AS l2 FROM {seq2} GROUP BY word),
     tot2 AS (
       SELECT CAST(SUM(l.l2 * w.f) AS BIGINT) AS syms2
-      FROM len2 l JOIN x300_wf w ON l.word = w.word
+      FROM len2 l JOIN {wf} w ON l.word = w.word
     )
     SELECT t0.n_words, t0.n_distinct_words,
            t0.syms0 AS syms_chars, t2.syms2 AS syms_after_2_merges,
@@ -354,7 +292,10 @@ def x300_bpe_compression(spark, sf_dir):
              AS saved_bp,
            b1.s1 || '+' || b1.s2 AS merge1,
            b2.s1 || '+' || b2.s2 AS merge2
-    FROM tot0 t0, tot2 t2, best1 b1, best2 b2"""
+    FROM tot0 t0, tot2 t2, best1 b1, best2 b2""",
+        wf=wf,
+        seq2=seq2,
+        **pcs,
     )
 
 # -- x301: System-R join-size estimate vs truth ------------------------------

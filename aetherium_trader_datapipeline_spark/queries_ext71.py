@@ -126,7 +126,7 @@ def x307_exact_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_jaccard_pairs,
     )
 
-    load_tables(spark, sf_dir)["documents"].createOrReplaceTempView("documents")
+    load_tables(spark, sf_dir)
     # r13 restructure (guide §2.4 — remove shuffles outright): the old
     # pipeline materialized a DISTINCT (doc_id, w) token table, derived
     # per-doc signatures in a SECOND doc_id-keyed grouping, and joined the
@@ -163,14 +163,13 @@ def x307_exact_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM d GROUP BY md5(array_join(tw, ' '))
         """
     ).localCheckpoint()  # read 3x: rep_toks below + the two members joins
-    reps.createOrReplaceTempView("x307_reps")
     # Dictionary-encode the reps' bigrams, pack each rep's token-id set
     # into an array. localCheckpoint because the kernel's triangle union
     # reads the frame twice.
     rep_toks = spark.sql(
         """
         WITH rt AS (
-          SELECT doc_id, members, w FROM x307_reps
+          SELECT doc_id, members, w FROM {reps}
           LATERAL VIEW explode(tw) t AS w
         ),
         vocab AS (
@@ -185,7 +184,8 @@ def x307_exact_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                rt.doc_id, rt.members, collect_list(v.wid) AS toks
         FROM rt JOIN vocab v ON rt.w = v.w
         GROUP BY rt.doc_id, rt.members
-        """
+        """,
+        reps=reps,
     ).localCheckpoint()
     pairs = exact_jaccard_pairs(
         rep_toks, "doc_id", "toks", threshold_num=8, threshold_den=10

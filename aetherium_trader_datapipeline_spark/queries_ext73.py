@@ -95,7 +95,7 @@ _X309_SPARK = _x309_sql(_md5i_spark, "SELECT explode(sequence(0, 31)) AS b").rep
     # local[32] at sf0.1.  Spark side only; the DuckDB oracle text is
     # unchanged.
     "FROM orders o CROSS JOIN reps b",
-    "FROM x309_orders_rep o CROSS JOIN reps b",
+    "FROM {orders_rep} o CROSS JOIN reps b",
 )
 
 
@@ -105,5 +105,4 @@ _X309_SPARK = _x309_sql(_md5i_spark, "SELECT explode(sequence(0, 31)) AS b").rep
 def x309_poisson_bootstrap(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     p = spark.sparkContext.defaultParallelism * 2
-    t["orders"].repartition(p).createOrReplaceTempView("x309_orders_rep")
-    return spark.sql(_X309_SPARK)
+    return spark.sql(_X309_SPARK, orders_rep=t["orders"].repartition(p))

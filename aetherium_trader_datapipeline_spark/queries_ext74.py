@@ -216,14 +216,12 @@ def x311_conformal_interval(spark, sf_dir):
     natural boundaries (base once; the one-row coef; the bounded cal
     sample; the one-row q) runs the lineitem scan ONCE; all CTE
     expressions and the DuckDB oracle are textually unchanged."""
-    load_tables(spark, sf_dir)["lineitem"].createOrReplaceTempView(
-        "lineitem"
-    )
-    # base stays a VIEW, not a checkpoint: materializing the full
-    # projected lineitem costs more than the three pruned parquet
-    # re-scans it would save (measured 0.95x at sf0.1), and at scale
-    # writing the whole fact projection is strictly worse.
-    spark.sql(
+    load_tables(spark, sf_dir)
+    # base stays an unmaterialized DataFrame, not a checkpoint:
+    # materializing the full projected lineitem costs more than the three
+    # pruned parquet re-scans it would save (measured 0.95x at sf0.1), and
+    # at scale writing the whole fact projection is strictly worse.
+    base = spark.sql(
         """
       SELECT CAST(l_quantity AS DOUBLE) AS x,
              CAST(l_extendedprice AS DOUBLE) AS y,
@@ -231,10 +229,10 @@ def x311_conformal_interval(spark, sf_dir):
              ((l_orderkey * 8 + l_linenumber) * 2654435761) % 4294967296 % 10
                AS bucket
       FROM lineitem"""
-    ).createOrReplaceTempView("x311_base")
+    )
     coef = spark.sql(
         """
-    WITH base AS (SELECT * FROM x311_base),
+    WITH base AS (SELECT * FROM {base}),
     train AS (SELECT * FROM base WHERE bucket <= 5),
     fit AS (
       SELECT CAST(COUNT(*) AS DOUBLE) AS n,
@@ -248,20 +246,21 @@ def x311_conformal_interval(spark, sf_dir):
     )
     SELECT (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope,
            (sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n AS icept
-    FROM fit"""
+    FROM fit""",
+        base=base,
     ).localCheckpoint()
-    coef.createOrReplaceTempView("x311_coef")
     cal = spark.sql(
         """
       SELECT ABS(b.y - (c.icept + c.slope * b.x)) AS r, b.rid
-      FROM x311_base b CROSS JOIN (SELECT * FROM x311_coef LIMIT 1) c
+      FROM {base} b CROSS JOIN (SELECT * FROM {coef} LIMIT 1) c
       WHERE b.bucket IN (6, 7)
-        AND ((b.rid * 1103515245) % 4294967296) % 50 = 0"""
+        AND ((b.rid * 1103515245) % 4294967296) % 50 = 0""",
+        base=base,
+        coef=coef,
     ).localCheckpoint()
-    cal.createOrReplaceTempView("x311_cal")
     q = spark.sql(
         """
-    WITH cal AS (SELECT * FROM x311_cal),
+    WITH cal AS (SELECT * FROM {cal}),
     cb AS (SELECT MIN(r) AS lo, MAX(r) AS hi,
                   CAST(COUNT(*) AS BIGINT) AS nc FROM cal),
     cch AS (
@@ -285,16 +284,16 @@ def x311_conformal_interval(spark, sf_dir):
     )
     SELECT w.r AS radius
     FROM cw w JOIN co o ON w.ck = o.ck CROSS JOIN cb b
-    WHERE o.off + w.r_in = CAST(CEIL(0.9 * b.nc) AS BIGINT)"""
+    WHERE o.off + w.r_in = CAST(CEIL(0.9 * b.nc) AS BIGINT)""",
+        cal=cal,
     ).localCheckpoint()
-    q.createOrReplaceTempView("x311_q")
     return spark.sql(
         """
     WITH test AS (
       SELECT CASE WHEN ABS(b.y - (c.icept + c.slope * b.x)) <= q.radius
                   THEN 1 ELSE 0 END AS hit
-      FROM x311_base b CROSS JOIN (SELECT * FROM x311_coef LIMIT 1) c
-           CROSS JOIN (SELECT * FROM x311_q LIMIT 1) q
+      FROM {base} b CROSS JOIN (SELECT * FROM {coef} LIMIT 1) c
+           CROSS JOIN (SELECT * FROM {q} LIMIT 1) q
       WHERE b.bucket >= 8
     )
     SELECT ROUND(c.slope, 6) AS slope, ROUND(c.icept, 4) AS intercept,
@@ -303,9 +302,12 @@ def x311_conformal_interval(spark, sf_dir):
            CAST(SUM(hit) * 10000 DIV COUNT(*) AS BIGINT) AS coverage_bp,
            SUM(hit) * 100 >= 85 * COUNT(*)
              AND SUM(hit) * 100 <= 97 * COUNT(*) AS near_nominal
-    FROM test CROSS JOIN (SELECT * FROM x311_coef LIMIT 1) c
-         CROSS JOIN (SELECT * FROM x311_q LIMIT 1) q
-    GROUP BY c.slope, c.icept, q.radius"""
+    FROM test CROSS JOIN (SELECT * FROM {coef} LIMIT 1) c
+         CROSS JOIN (SELECT * FROM {q} LIMIT 1) q
+    GROUP BY c.slope, c.icept, q.radius""",
+        base=base,
+        coef=coef,
+        q=q,
     )
 
 # -- x312: k-anonymity audit ---------------------------------------------------

@@ -105,9 +105,7 @@ def x348_dedup_threshold_sweep(spark, sf_dir):
     0..n-1 within a doc, g is NULL only at the last token); (2) `grams`
     and `scored` are checkpointed once; the threshold tail reads the
     small pair checkpoint.  24 documents scans -> 1."""
-    load_tables(spark, sf_dir)["documents"].createOrReplaceTempView(
-        "documents"
-    )
+    load_tables(spark, sf_dir)
     grams = spark.sql(
         f"""
     WITH toks AS ({_TOKS_SPARK.replace("FROM documents",
@@ -119,10 +117,9 @@ def x348_dedup_threshold_sweep(spark, sf_dir):
       FROM toks) z
     WHERE g IS NOT NULL"""
     ).localCheckpoint()
-    grams.createOrReplaceTempView("x348_grams")
     scored = spark.sql(
         """
-    WITH grams AS (SELECT id, g FROM x348_grams),
+    WITH grams AS (SELECT id, g FROM {grams}),
     sizes AS (SELECT id, CAST(COUNT(*) AS BIGINT) AS n FROM grams GROUP BY id),
     inter AS (
       SELECT x.id AS a, y.id AS b, CAST(COUNT(*) AS BIGINT) AS i
@@ -133,16 +130,16 @@ def x348_dedup_threshold_sweep(spark, sf_dir):
            CAST(FLOOR(CAST(i.i AS DOUBLE) * 1000 / (sa.n + sb.n - i.i))
              AS BIGINT) AS j_milli
     FROM inter i
-    JOIN sizes sa ON i.a = sa.id JOIN sizes sb ON i.b = sb.id"""
+    JOIN sizes sa ON i.a = sa.id JOIN sizes sb ON i.b = sb.id""",
+        grams=grams,
     ).localCheckpoint()
-    scored.createOrReplaceTempView("x348_scored")
     return spark.sql(
         f"""
     WITH thresholds AS (
       SELECT CAST(t AS BIGINT) AS thr FROM ({_THR_REL}) v(t)
     ),
     hits AS (
-      SELECT t.thr, s.a, s.b FROM x348_scored s JOIN thresholds t
+      SELECT t.thr, s.a, s.b FROM {{scored}} s JOIN thresholds t
         ON s.j_milli >= t.thr
     ),
     pair_counts AS (
@@ -157,7 +154,8 @@ def x348_dedup_threshold_sweep(spark, sf_dir):
     )
     SELECT p.thr, p.n_pairs, d.n_docs, p.min_doc
     FROM pair_counts p JOIN doc_counts d ON p.thr = d.thr
-    ORDER BY p.thr"""
+    ORDER BY p.thr""",
+        scored=scored,
     )
 
 # -- x349: quality-filter funnel -----------------------------------------------

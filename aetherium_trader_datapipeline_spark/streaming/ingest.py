@@ -17,7 +17,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from aetherium_trader_datapipeline_spark.operators.merge import _hadoop_fs
+from aetherium_trader_datapipeline_spark.operators.merge import (
+    _hadoop_fs,
+    reject_stream_sink_root,
+)
 from aetherium_trader_datapipeline_spark.operators.validate import (
     TICK_SCHEMA_DDL,
     tick_valid_expr,
@@ -120,9 +123,13 @@ def ingest_batch(ticks: DataFrame, out_dir: str) -> tuple[int, int | None]:
     UNFILTERED source plan in two extra actions, so (a) a day whose last
     rows were invalid advanced the cursor past data that was never
     persisted, and (b) a non-deterministic live fetch was executed three
-    times with three potentially different answers (r10 review)."""
+    times with three potentially different answers (r10 review).
+
+    Raises ``ValueError`` before any Spark work if ``out_dir`` is a
+    streaming file-sink output (``reject_stream_sink_root``)."""
     from pyspark.sql import Observation
 
+    reject_stream_sink_root(ticks.sparkSession, out_dir)
     obs = Observation()
     out = with_partition_cols(ticks.where(tick_valid_expr())).observe(
         obs,

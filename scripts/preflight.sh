@@ -5,7 +5,7 @@
 # after the round's final waves — this makes the re-run mechanical.
 #
 # Usage:
-#   scripts/preflight.sh                 # plan audit only (~3 min)
+#   scripts/preflight.sh                 # driver contract + plan audit (~3 min)
 #   scripts/preflight.sh x575 x571 ...   # audit + oracle rows for the
 #                                        # named keys (substring match on
 #                                        # the pytest parametrize id)
@@ -14,7 +14,7 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-python -m pytest tests/test_plan_audit.py -q
+python -m pytest tests/test_driver_contract.py tests/test_plan_audit.py -q
 
 if [ "$#" -gt 0 ]; then
   expr=""

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -46,3 +47,18 @@ def test_registering_a_known_key_raises():
         Q.register("q01_scan_agg", oracle="SELECT 1 AS n")(lambda spark, sf_dir: None)
     assert Q.REGISTRY["q01_scan_agg"] is before
     assert len(Q.REGISTRY) == 575
+
+
+def test_only_tables_registers_views():
+    """``tables.load_tables`` registers the fixture views; every other
+    module passes intermediates to ``spark.sql`` as DataFrame arguments
+    (``spark.sql("... {g} ...", g=g)``), which bind through views the call
+    drops again.  A fixed-name view outlives the run and races with any
+    other run in the session."""
+    root = Path(Q.__file__).parent
+    offenders = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if p != root / "tables.py" and "createOrReplaceTempView" in p.read_text()
+    )
+    assert offenders == []

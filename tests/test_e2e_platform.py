@@ -86,6 +86,43 @@ def test_ingest_outage_gap_backfill_verify(spark):
     assert st.cursor > 0
 
 
+def test_backfill_refuses_stream_sink_lake(spark, tmp_path):
+    """Live ingest streams the first half of a day; a backfill of that day
+    (its resume day) must fail and leave the streamed lake readable.  The
+    file sink's ``_spark_metadata`` log lists only streamed files, so the
+    batch dynamic overwrite used to delete files the log still listed:
+    the job reported COMPLETED and every later read of the lake failed
+    with FILE_NOT_EXIST."""
+    from aetherium_trader_datapipeline_spark.plans.backfill_service import backfill_range
+    from aetherium_trader_datapipeline_spark.plans.control_table import (
+        ControlTable,
+        job_key,
+    )
+    from aetherium_trader_datapipeline_spark.sources.ticks import historical_ticks
+    from aetherium_trader_datapipeline_spark.streaming.ingest import (
+        ingest_stream,
+        read_lake,
+    )
+
+    src, data, ckpt = (str(tmp_path / d) for d in ("src", "data", "ckpt"))
+    day = historical_ticks(spark, "NQ", "2025-12-01")
+    day.where("hour(timestamp) < 12").coalesce(1).write.parquet(src)
+    q = ingest_stream(
+        spark.readStream.schema(day.schema).parquet(src), data, ckpt, available_now=True
+    )
+    q.awaitTermination(120)
+    assert read_lake(spark, data).count() == 720
+
+    control = ControlTable(str(tmp_path / "ctl"))
+    report = backfill_range(
+        spark, control, historical_ticks, data, "NQ", "2025-12-01", "2025-12-01"
+    )
+    st = control.get(job_key("NQ", "2025-12-01"))
+    assert (st.status, st.last_error_type) == ("FAILED", "ValueError")
+    assert report.failed_days == ["2025-12-01"]
+    assert read_lake(spark, data).count() == 720
+
+
 @pytest.mark.parametrize("layout", ["missing", "empty"])
 def test_empty_lake_dir_reads_as_empty_lake(spark, layout):
     """A missing lake directory, or a fresh `mkdir data`, is an empty lake

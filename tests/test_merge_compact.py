@@ -12,6 +12,7 @@ import os
 import tempfile
 import warnings
 
+import pytest
 from pyspark.sql import functions as F
 
 from aetherium_trader_datapipeline_spark.operators.merge import (
@@ -103,6 +104,29 @@ def test_compact_partitions_reduces_file_count(spark):
     assert stats["files_before"] == len(files_before)
     after = {(r.k, r.v, r.d) for r in spark.read.parquet(base).collect()}
     assert before == after
+
+
+def test_compact_partitions_refuses_stream_sink_root(spark, tmp_path):
+    """A root the streaming file sink writes is read through its
+    ``_spark_metadata`` log, so a dynamic overwrite there deletes files the
+    log still lists.  Compaction refuses such a root before touching it."""
+    src, base, ckpt = (str(tmp_path / d) for d in ("src", "t", "ckpt"))
+    spark.range(0, 200).selectExpr("id AS k", "CAST(id % 2 AS STRING) AS d").write.parquet(src)
+    q = (
+        spark.readStream.schema("k BIGINT, d STRING").parquet(src)
+        .writeStream.format("parquet")
+        .option("path", base)
+        .option("checkpointLocation", ckpt)
+        .partitionBy("d")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    files = sorted(glob.glob(os.path.join(base, "d=*", "*.parquet")))
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        compact_partitions(spark, base, partition_col="d")
+    assert sorted(glob.glob(os.path.join(base, "d=*", "*.parquet"))) == files
+    assert spark.read.parquet(base).count() == 200
 
 
 def test_merge_upsert_idempotent_reapply(spark):

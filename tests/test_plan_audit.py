@@ -117,11 +117,32 @@ def plan_findings(df) -> dict:
     }
 
 
+def _temp_views(spark) -> set[str]:
+    ids = spark._jsparkSession.sessionState().catalog().listLocalTempViews("*")
+    return {ids.apply(i).table() for i in range(ids.size())}
+
+
 @pytest.fixture(scope="module")
 def registry_findings(spark) -> dict[str, dict]:
-    """``plan_findings`` for every registry key, each key built once."""
+    """``plan_findings`` for every registry key, each key built once, plus
+    the temporary views the build added or dropped (``views``)."""
     queries()
-    return {key: plan_findings(q.run(spark, SF_DIR)) for key, q in REGISTRY.items()}
+    load_tables(spark, SF_DIR)
+    findings = {}
+    for key, q in REGISTRY.items():
+        before = _temp_views(spark)
+        findings[key] = plan_findings(q.run(spark, SF_DIR))
+        findings[key]["views"] = sorted(_temp_views(spark) ^ before)
+    return findings
+
+
+def test_registry_builds_leave_no_views(registry_findings):
+    """A key passes its intermediates to ``spark.sql`` as DataFrame
+    arguments, so building it leaves the session's temporary views as it
+    found them: no fixed-name view outlives the run, and two runs in one
+    session cannot read each other's intermediates."""
+    leaked = {k: f["views"] for k, f in registry_findings.items() if f["views"]}
+    assert leaked == {}, leaked
 
 
 def _offenders(found: dict[str, list], allowed) -> tuple[dict, list]:

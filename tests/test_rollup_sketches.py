@@ -84,26 +84,25 @@ def test_ohlcv_cascade_equals_direct(spark, tables):
     bars computed directly from ticks (open/close via min_by/max_by on the
     finer bar's window start, high/low/vol associative)."""
     ev = tables["events"]
-    ev.createOrReplaceTempView("events")
     cascade = spark.sql("""
         WITH m AS (
           SELECT user_id, date_trunc('minute', ts) AS wm,
                  MIN_BY(value, ts) AS o, MAX(value) AS h,
                  MIN(value) AS l, MAX_BY(value, ts) AS c,
                  SUM(CAST(ROUND(value, 4) AS DECIMAL(18,4))) AS vol
-          FROM events GROUP BY user_id, date_trunc('minute', ts))
+          FROM {events} GROUP BY user_id, date_trunc('minute', ts))
         SELECT user_id, date_trunc('hour', wm) AS wh,
                MIN_BY(o, wm) AS open, MAX(h) AS high,
                MIN(l) AS low, MAX_BY(c, wm) AS close, SUM(vol) AS vol
         FROM m GROUP BY user_id, date_trunc('hour', wm)
-    """)
+    """, events=ev)
     direct = spark.sql("""
         SELECT user_id, date_trunc('hour', ts) AS wh,
                MIN_BY(value, ts) AS open, MAX(value) AS high,
                MIN(value) AS low, MAX_BY(value, ts) AS close,
                SUM(CAST(ROUND(value, 4) AS DECIMAL(18,4))) AS vol
-        FROM events GROUP BY user_id, date_trunc('hour', ts)
-    """)
+        FROM {events} GROUP BY user_id, date_trunc('hour', ts)
+    """, events=ev)
     a = sorted(map(tuple, cascade.collect()))
     b = sorted(map(tuple, direct.collect()))
     assert a == b

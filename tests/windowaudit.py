@@ -7,7 +7,8 @@ a bounded chunk grid), catastrophic when it is corpus-sized.
 
 Used by the standing pytest gate (tests/test_plan_audit.py), whose other
 plan checks walk the same py4j trees with ``walk``.  Classification walks
-the compiled sparkPlan (pre-exchange) operator tree:
+the compiled sparkPlan (pre-exchange) operator tree, including the plans
+nested in it (subqueries, cached relations):
 
 - ``bounded_by_limit``     — GlobalLimit / TakeOrderedAndProject /
   CollectLimit below the window: input <= the literal limit.
@@ -28,7 +29,7 @@ AUTO_BOUNDED = frozenset({"bounded_by_limit", "bounded_by_scalar_agg"})
 # (Expand multiplies by a CONSTANT grouping-set factor; Generate can
 # explode arbitrarily, so it is NOT pass-through.)
 _PASS_THROUGH = {
-    "Project", "Filter", "Sort", "Window", "WindowInPandas",
+    "Project", "Filter", "Sort", "Window", "ArrowWindowPython",
     "WindowGroupLimit", "Coalesce", "Exchange", "ShuffleExchange",
     "AQEShuffleRead", "InputAdapter", "WholeStageCodegen",
     "ColumnarToRow", "RowToColumnar", "SerializeFromObject",
@@ -38,7 +39,7 @@ _PASS_THROUGH = {
 _LIMIT_NODES = {"GlobalLimit", "LocalLimit", "TakeOrderedAndProject",
                 "CollectLimit"}
 _AGG_NODES = {"HashAggregate", "SortAggregate", "ObjectHashAggregate"}
-_WINDOW_NODES = {"WindowExec", "WindowInPandasExec"}
+_WINDOW_NODES = {"WindowExec", "ArrowWindowPythonExec"}
 
 
 def _simple(node) -> str:
@@ -53,18 +54,12 @@ def _children(node):
     return _seq(node.children())
 
 
-def _walk(node):
-    yield node
-    for c in _children(node):
-        yield from _walk(c)
-
-
 def walk(node, ancestors: tuple = ()):
     """Pre-order ``(node, ancestors)`` over everything the plan's text
-    form prints, ``ancestors`` root first: unlike ``_walk`` it also
-    descends into nested plans (subqueries and cached relations, under
-    the node that holds them), and an AQE node stands for its initial
-    plan (the post-EnsureRequirements tree, with its Exchanges)."""
+    form prints, ``ancestors`` root first: it descends into nested plans
+    (subqueries and cached relations, under the node that holds them)
+    as well as children, and an AQE node stands for its initial plan
+    (the post-EnsureRequirements tree, with its Exchanges)."""
     yield node, ancestors
     if node.nodeName() == "AdaptiveSparkPlan":
         kids = [node.initialPlan()]
@@ -94,10 +89,11 @@ def classify_window_input(window_node) -> dict:
 
 
 def global_windows(df) -> list[dict]:
-    """Every empty-partition-spec window in df's sparkPlan, classified."""
+    """Every empty-partition-spec window in df's sparkPlan and the plans
+    nested in it, classified."""
     plan = df._jdf.queryExecution().sparkPlan()
     out = []
-    for node in _walk(plan):
+    for node, _ in walk(plan):
         if node.getClass().getSimpleName() in _WINDOW_NODES:
             if node.partitionSpec().isEmpty():
                 out.append(classify_window_input(node))
