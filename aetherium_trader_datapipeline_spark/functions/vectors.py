@@ -49,8 +49,3 @@ def quantize_int8(a: Column | str, scale: float = 127.0) -> Column:
     integer SIMD distance kernels downstream.
     """
     return F.transform(normalize_l2(a), lambda x: F.floor(x * scale).cast("int"))
-
-
-def dequantize_int8(q: Column | str, scale: float = 127.0) -> Column:
-    q = F.col(q) if isinstance(q, str) else q
-    return F.transform(q, lambda x: x.cast("double") / scale)

@@ -10,7 +10,7 @@ bounds the join fan-out and removes noise pairs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -162,30 +162,6 @@ def minhash_lsh_candidates(
     )
 
 
-def minhash_lsh_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    shingle_size: int = 2,
-    num_perm: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Near-dup pairs: LSH candidates verified with exact Jaccard >= threshold.
-
-    Output (a, b, jaccard) — a subset of ``ngram_jaccard_pairs`` filtered to
-    LSH-recalled candidates; recall vs. the exact result is the test metric.
-    """
-    sigs = minhash_signatures(df, id_col, text_col, shingle_size, num_perm)
-    cand = minhash_lsh_candidates(sigs, num_perm, bands)
-    exact = ngram_jaccard_pairs(df, id_col, text_col, shingle_size)
-    return (
-        cand.join(exact, ["a", "b"])
-        .where(F.col("jaccard") >= threshold)
-        .orderBy(F.desc("jaccard"), "a", "b")
-    )
-
-
 def simhash_signatures(
     df: DataFrame, id_col: str, text_col: str = "text", bits: int = 64
 ) -> DataFrame:
@@ -250,16 +226,6 @@ def simhash_neardup_pairs(
         cand.select("a", "b", hamming.alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
         .orderBy("hamming", "a", "b")
-    )
-
-
-def keep_first_dedup(
-    df: DataFrame, key_cols: list[str], order_cols: list[str]
-) -> DataFrame:
-    """Keep-first dedup: deterministic representative per key via row_number."""
-    w = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    return (
-        df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
     )
 
 

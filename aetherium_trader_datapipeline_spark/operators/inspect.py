@@ -9,7 +9,7 @@ reference's gap scan relied on, detectors/gap.rs:70-83).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
@@ -28,14 +28,3 @@ def inspect_parquet(spark: SparkSession, path: str) -> dict:
         "schema": df.schema.simpleString(),
         "files": {r["file"]: r["count"] for r in per_file},
     }
-
-
-def files_with_data(spark: SparkSession, path: str) -> DataFrame:
-    """Files with num_rows > 0 (the reference treats empty files as missing
-    data, detectors/gap.rs:60-62)."""
-    df = spark.read.parquet(path)
-    return (
-        df.groupBy(F.input_file_name().alias("file"))
-        .count()
-        .where(F.col("count") > 0)
-    )

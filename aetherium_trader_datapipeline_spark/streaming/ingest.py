@@ -75,41 +75,34 @@ def ingest_stream(
         F.count(F.lit(1)).alias("rows"),
         F.sum(F.when(tick_valid_expr(), 0).otherwise(1)).alias("invalid_rows"),
     )
-    valid = ticks.where(tick_valid_expr())
-    out = with_partition_cols(valid)
-    writer = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("symbol", "date", "hour")
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    q = writer.start()
+
+    # One sink for both queries, so the quarantine query always gets the
+    # main query's trigger: a hardcoded availableNow trigger there drained
+    # only the data present at startup and then stopped, silently dropping
+    # every later invalid row of a continuous run.
+    def start_sink(frame: DataFrame, path: str, checkpoint: str) -> StreamingQuery:
+        writer = (
+            with_partition_cols(frame)
+            .writeStream.format("parquet")
+            .option("path", path)
+            .option("checkpointLocation", checkpoint)
+            .partitionBy("symbol", "date", "hour")
+            .outputMode("append")
+        )
+        if available_now:
+            return writer.trigger(availableNow=True).start()
+        return writer.trigger(processingTime=f"{trigger_seconds} seconds").start()
+
+    q = start_sink(ticks.where(tick_valid_expr()), out_dir, checkpoint_dir)
     # the quarantine handle rides on the returned query as a plain Python
     # attribute so callers can await/stop it alongside the main query
     q.quarantine_query = None
     if quarantine_dir is not None:
-        qw = (
-            with_partition_cols(ticks.where(~tick_valid_expr()))
-            .writeStream.format("parquet")
-            .option("path", quarantine_dir)
-            .option("checkpointLocation", checkpoint_dir + "_quarantine")
-            .partitionBy("symbol", "date", "hour")
-            .outputMode("append")
+        q.quarantine_query = start_sink(
+            ticks.where(~tick_valid_expr()),
+            quarantine_dir,
+            checkpoint_dir + "_quarantine",
         )
-        # SAME trigger as the main query: a hardcoded availableNow trigger
-        # here drained only the data present at startup and then stopped,
-        # silently dropping every later invalid row of a CONTINUOUS run
-        # (r10 review)
-        if available_now:
-            qw = qw.trigger(availableNow=True)
-        else:
-            qw = qw.trigger(processingTime=f"{trigger_seconds} seconds")
-        q.quarantine_query = qw.start()
     return q
 
 

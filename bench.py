@@ -5,19 +5,18 @@
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Median of N_RUNS (default 3) per query after one warm-up pass of the full
-suite — the protocol recorded in BASELINE.md ("per-query wall-clock
-(median of 3)", "sum of medians"); keep statistic and run count in sync
-with BASELINE.md if either ever changes.
+Median of N_RUNS (default 3) per query, timed by ``metrics.measure``,
+after one warm-up pass of the full suite — the protocol recorded in
+BASELINE.md ("per-query wall-clock (median of 3)", "sum of medians");
+keep statistic and run count in sync with BASELINE.md if either ever
+changes.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -28,7 +27,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from aetherium_trader_datapipeline_spark.queries import REGISTRY, headline_keys
+    from aetherium_trader_datapipeline_spark.metrics import measure
+    from aetherium_trader_datapipeline_spark.queries import headline_keys
     from aetherium_trader_datapipeline_spark.session import get_spark
     from aetherium_trader_datapipeline_spark.tables import load_tables
 
@@ -40,21 +40,9 @@ def main() -> None:
 
     # Warm-up: full pass (JIT, codegen, file-footer caches).
     for k in keys:
-        REGISTRY[k].run(spark, sf_dir).collect()
+        measure(spark, k, sf_dir)
 
-    per_query: dict[str, float] = {}
-    for k in keys:
-        samples = []
-        for _ in range(N_RUNS):
-            # drop DataFrame caches a key may create (persist-based
-            # materializations): a canonically identical plan would
-            # otherwise read run 1's cache and fake runs 2..N (r12
-            # review; no current headline key persists, this is a guard)
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            REGISTRY[k].run(spark, sf_dir).collect()
-            samples.append(time.perf_counter() - t0)
-        per_query[k] = round(statistics.median(samples), 4)
+    per_query = {k: measure(spark, k, sf_dir, runs=N_RUNS)["wall_s"] for k in keys}
 
     total = round(sum(per_query.values()), 4)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

@@ -7,7 +7,8 @@
 # Usage:
 #   scripts/preflight.sh                 # driver contract + plan audit (~3 min)
 #   scripts/preflight.sh x575 x571 ...   # audit + oracle rows for the
-#                                        # named keys (substring match on
+#                                        # named keys at sf0.001, sf0.01
+#                                        # and sf0.1 (substring match on
 #                                        # the pytest parametrize id)
 #
 # A wave commit is NOT done until this exits 0.
@@ -21,7 +22,10 @@ if [ "$#" -gt 0 ]; then
   for k in "$@"; do
     expr="${expr:+$expr or }$k"
   done
-  python -m pytest tests/test_queries_oracle.py -q -k "$expr"
+  for sf in /root/testdata/sf0.{001,01,1}; do
+    SPARK_GRAFT_TEST_SF_DIR="$sf" \
+      python -m pytest tests/test_queries_oracle.py -q -k "$expr"
+  done
 fi
 
 echo "preflight OK"

@@ -34,7 +34,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # seconds per test FILE, measured from the r11 full-suite run
 # (junitxml sums); test_plan_audit.py re-measured with --durations=0 on
-# 4 cores after its four registry passes became one. Refresh
+# 4 cores after its four registry passes became one; test_metrics.py
+# measured the same way (call time, session setup excluded). Refresh
 # occasionally; missing files are estimated.
 _DURATIONS: dict[str, float] = {}  # populated below by _load_measured()
 
@@ -66,6 +67,7 @@ test_pydatasource.py 7
 test_e2e_platform.py 6
 test_skew_bucketing.py 5
 test_io_formats.py 4
+test_metrics.py 4
 test_protoshim.py 1
 """
 

@@ -1,33 +1,45 @@
 #!/usr/bin/env python
-"""Time registry keys against an arbitrary table directory (scale replicas).
+"""Time registry keys against a table directory (fixtures or scale replicas).
 
 Usage:
-  python scripts/time_keys.py <dir> key1 key2 ...
-Prints one JSON line per key: {"key": ..., "wall_s": ..., "rows": ..., "dir": ...}
+  python scripts/time_keys.py <dir> [--runs N] [key1 key2 ...]
 
-Used to produce SCALE.md's per-wave 10x/100x rows: run once after a warm
-scan; wall is a single end-to-end run (plan + execute + collect count).
+With no keys, every registry key is measured (a job-count sweep:
+``--runs 1``). Each key is run once untimed (codegen, footer caches), then
+timed by ``metrics.measure`` (median of N runs of ``run()`` plus a
+noop-sink write, default 3), after one warm scan of every table.
+``q01_scan_agg`` is always measured first as the host calibrator, so every
+figure carries a same-session denominator. Prints one JSON line per key:
+{"key", "sf", "cpus", "wall_s", "samples", "rows", "jobs"}, or
+{"key", "error"} for a key that raised; the sweep goes on.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+CALIBRATOR = "q01_scan_agg"
+
 
 def main() -> None:
-    replica = sys.argv[1]
-    keys = sys.argv[2:]
+    ap = argparse.ArgumentParser()
+    ap.add_argument("dir")
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("keys", nargs="*")
+    args = ap.parse_intermixed_args()
 
     from pyspark.sql import functions as F
 
+    from aetherium_trader_datapipeline_spark.metrics import measure
     from aetherium_trader_datapipeline_spark.queries import REGISTRY, _load_extensions
     from aetherium_trader_datapipeline_spark.session import get_spark
+    from aetherium_trader_datapipeline_spark.tables import load_tables
 
     _load_extensions()
     spark = get_spark(
@@ -35,46 +47,18 @@ def main() -> None:
         extra_conf={"spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="tk-wh-")},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    from aetherium_trader_datapipeline_spark.tables import load_tables
-
-    for t, df in load_tables(spark, replica).items():
+    for df in load_tables(spark, args.dir).values():
         df.agg(F.count(F.lit(1))).collect()  # warm the scans
 
-    # SPARK_GRAFT_TIME_RUNS > 1 prints the median of N timed runs
-    # (plus the samples): single-run 100x probes on this shared host
-    # measured a 1.6x same-code spread in r12 — medians are the honest
-    # default for any number that lands in SCALE.md. Default stays 1 so
-    # historical single-run rows remain comparable.
-    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_TIME_RUNS", "1")))
+    keys = [CALIBRATOR] + [k for k in args.keys or REGISTRY if k != CALIBRATOR]
     for k in keys:
-        # Time a noop-sink write, not .count(): count() lets Catalyst
-        # prune every non-grouping column (window/aggregate work
-        # included), so queries whose cost lives in pruned columns time
-        # a hollow plan (x386 measured flat 0.46 s at 100x under count()
-        # vs the real materialized cost). The noop sink materializes all
-        # output columns without writing bytes. Row count is taken
-        # untimed afterwards.
-        samples = []
-        for _ in range(n_runs):
-            spark.catalog.clearCache()  # persist-based keys: no cross-run reuse
-            # r14 measurement fix: t0 must wrap run() too — function keys
-            # do eager work (localCheckpoint) inside run(), which the old
-            # placement left UNTIMED (bench.py has always timed
-            # run().collect() as one unit; this restores parity).
-            t0 = time.monotonic()
-            df = REGISTRY[k].run(spark, replica)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(round(time.monotonic() - t0, 2))
-        samples.sort()
-        rec = {
-            "key": k,
-            "wall_s": samples[len(samples) // 2],
-            "rows": df.count(),
-            "dir": replica,
-        }
-        if n_runs > 1:
-            rec["samples"] = samples
+        try:
+            measure(spark, k, args.dir)  # warm-up run, untimed
+            rec = measure(spark, k, args.dir, runs=args.runs)
+        except Exception as e:  # noqa: BLE001 - record the key, keep sweeping
+            rec = {"key": k, "error": str(e)[:200]}
         print(json.dumps(rec), flush=True)
+    spark.stop()
 
 
 if __name__ == "__main__":

@@ -54,11 +54,14 @@ def test_only_tables_registers_views():
     module passes intermediates to ``spark.sql`` as DataFrame arguments
     (``spark.sql("... {g} ...", g=g)``), which bind through views the call
     drops again.  A fixed-name view outlives the run and races with any
-    other run in the session."""
-    root = Path(Q.__file__).parent
+    other run in the session.  Tests and scripts share sessions too, so
+    they are held to the same rule."""
+    repo = Path(Q.__file__).parent.parent
+    call = re.compile(r"\.createOrReplaceTempView\(")
     offenders = sorted(
-        str(p.relative_to(root))
-        for p in root.rglob("*.py")
-        if p != root / "tables.py" and "createOrReplaceTempView" in p.read_text()
+        str(p.relative_to(repo))
+        for d in (PKG, "tests", "scripts")
+        for p in (repo / d).rglob("*.py")
+        if p != repo / PKG / "tables.py" and call.search(p.read_text())
     )
     assert offenders == []

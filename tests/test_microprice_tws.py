@@ -107,7 +107,6 @@ def test_microstructure_stream_equals_batch_equals_sql(spark, tmp_path):
 
     # x384/x386-shaped SQL window forms on the same integer frame; all
     # comparisons in exact integer space (m1²·cov = m1·c1 − sa·sb)
-    ticks.createOrReplaceTempView("mp_ticks")
     sql = {
         r.sym: r
         for r in spark.sql(
@@ -120,7 +119,7 @@ def test_microstructure_stream_equals_batch_equals_sql(spark, tmp_path):
                        PARTITION BY sym ORDER BY ts, event_id)
                        - LAG(px_micro, 2) OVER (
                            PARTITION BY sym ORDER BY ts, event_id) AS dp1
-              FROM mp_ticks
+              FROM {t}
             )
             SELECT sym,
                    COUNT(dp) AS n_rets, COUNT(dp1) AS m1,
@@ -132,7 +131,8 @@ def test_microstructure_stream_equals_batch_equals_sql(spark, tmp_path):
                    SUM(dp1) AS s_b,
                    SUM(ABS(dp) * ABS(dp1)) AS s_bp
             FROM d GROUP BY sym
-            """
+            """,
+            t=ticks,
         ).collect()
     }
     for sym, *vals in got:

@@ -617,7 +617,6 @@ def test_stateful_anomaly_stream_equals_batch(spark, tmp_path):
     assert not any(e in flagged for e in list(range(0, 10)))
 
     # SQL window replay agrees with the kernel (same inequality, same frame)
-    df.createOrReplaceTempView("anomaly_in")
     sql_flags = {
         (r.user_id, r.event_id, bool(r.flagged))
         for r in spark.sql(
@@ -625,7 +624,7 @@ def test_stateful_anomaly_stream_equals_batch(spark, tmp_path):
             WITH d AS (
               SELECT user_id, ts, event_id,
                      CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS xc
-              FROM anomaly_in),
+              FROM {t}),
             w AS (
               SELECT user_id, event_id, xc,
                      COUNT(*) OVER win AS n,
@@ -637,7 +636,8 @@ def test_stateful_anomaly_stream_equals_batch(spark, tmp_path):
             SELECT user_id, event_id,
                    (n >= 10 AND (n*xc - s)*(n*xc - s) > 9*(n*ss - s*s)) AS flagged
             FROM w
-            """
+            """,
+            t=df,
         ).collect()
     }
     assert sql_flags == expected

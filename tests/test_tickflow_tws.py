@@ -100,14 +100,13 @@ def test_tickflow_stream_equals_batch_equals_sql(spark, tmp_path):
     assert any(r.n_trades < last_n[r.sym] for r in rows)
 
     # SQL window form (x315's shape) on the same integer frame
-    ticks.createOrReplaceTempView("tf_ticks")
     sql = spark.sql(
         """
         WITH diffs AS (
           SELECT sym, ts, event_id,
                  px_micro - LAG(px_micro) OVER (
                    PARTITION BY sym ORDER BY ts, event_id) AS d
-          FROM tf_ticks
+          FROM {t}
         ),
         raw_sign AS (
           SELECT sym, ts, event_id,
@@ -127,7 +126,8 @@ def test_tickflow_stream_equals_batch_equals_sql(spark, tmp_path):
                SUM(CASE WHEN s IS NULL THEN 1 ELSE 0 END) AS n_unclassified,
                SUM(COALESCE(s, 0)) AS signed_flow
         FROM carried GROUP BY sym
-        """
+        """,
+        t=ticks,
     )
     want_sql = {
         (r.sym, r.n_trades, r.n_buy, r.n_sell, r.n_unclassified, r.signed_flow)
