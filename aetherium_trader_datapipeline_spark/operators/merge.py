@@ -41,10 +41,12 @@ def _hadoop_fs(spark: SparkSession, path_str: str):
 
 def reject_stream_sink_root(spark: SparkSession, root_path: str) -> None:
     """Refuse a batch overwrite of a root that Spark's streaming file sink
-    writes.  Readers of such a root list only the files named in its
+    wrote.  Readers of such a root list only the files named in its
     ``_spark_metadata`` log: a batch-written partition there is never read,
     and a dynamic overwrite deletes files the log still lists, so every
-    later read fails with FILE_NOT_EXIST."""
+    later read fails with FILE_NOT_EXIST.  The engine's own stream sink
+    (``streaming.ingest``) keeps no log, so only legacy lakes, written
+    before it, or roots of other file-sink queries are refused."""
     fs, root = _hadoop_fs(spark, root_path)
     log = spark._jvm.org.apache.hadoop.fs.Path(root, "_spark_metadata")
     if fs.exists(log):

@@ -19,15 +19,15 @@ cursor alone cannot distinguish "day done" from "a later day done" (an
 r10 review finding — a failed day behind a successful one was previously
 never re-planned and the job still read COMPLETED). A day whose fetch
 raises fails alone; a failed write fails every day of the batch, since
-dynamic partition overwrite commits nothing when its job fails.
+the lake writer commits nothing when its job fails.
 
 Fencing: every control-table mutation is instance-fenced (Z1), and the
 service re-fences via one heartbeat immediately before the one
 data-plane write, so a zombie that stalled inside fetch_day cannot
 clobber a takeover's partitions with stale data after waking up. The
 residual window (fence check → write) is inherent to an unlocked data
-plane; the write itself is idempotent (dynamic overwrite of the same
-days from the same source).
+plane; the write itself is idempotent (it replaces the hour directories
+of the same days with the same source's rows).
 """
 
 from __future__ import annotations
@@ -63,9 +63,11 @@ def existing_dates(spark: SparkSession, data_dir: str, symbol: str) -> DataFrame
     """Op G2 — catalog probe. Building the relation lists the whole
     store (every symbol's partitions); partition pruning then filters
     that listing to the symbol's partitions and reads only the partition
-    values, no data. Non-empty files are guaranteed by the sink
-    (empty-file case of detectors/gap.rs:60-83 cannot occur under Spark's
-    task commit). A missing store is empty (``read_lake``)."""
+    values, no data. Every partition directory holds rows: the lake
+    writer writes a file only for a (symbol, date, hour) that has rows and
+    moves it in only once its job succeeded, so the reference's empty-file
+    case (detectors/gap.rs:60-83) cannot occur, and staged or hidden files
+    are never listed. A missing store is empty (``read_lake``)."""
     lake = read_lake(spark, data_dir)
     return lake.where(F.col("symbol") == symbol).select(F.col("date").alias("d")).distinct()
 
@@ -142,7 +144,7 @@ def backfill_range(
         try:
             n, max_ts = ingest_batch(reduce(DataFrame.unionByName, frames), data_dir)
         except Exception as e:
-            # dynamic overwrite commits nothing on job failure, so no day
+            # the lake writer commits nothing on job failure, so no day
             # of the batch landed: all of them are re-planned on retry
             record_failure(batch, e)
         else:

@@ -86,14 +86,16 @@ def test_ingest_outage_gap_backfill_verify(spark):
     assert st.cursor > 0
 
 
-def test_backfill_refuses_stream_sink_lake(spark, tmp_path):
+def test_backfill_completes_streamed_lake(spark, tmp_path):
     """Live ingest streams the first half of a day; a backfill of that day
-    (its resume day) must fail and leave the streamed lake readable.  The
-    file sink's ``_spark_metadata`` log lists only streamed files, so the
-    batch dynamic overwrite used to delete files the log still listed:
-    the job reported COMPLETED and every later read of the lake failed
-    with FILE_NOT_EXIST."""
-    from aetherium_trader_datapipeline_spark.plans.backfill_service import backfill_range
+    and the next two lands in the same lake. The stream sink keeps no
+    ``_spark_metadata`` log, so every backfilled day is visible to queries
+    and to gap detection, and the streamed half-day is replaced, not
+    duplicated."""
+    from aetherium_trader_datapipeline_spark.plans.backfill_service import (
+        backfill_range,
+        existing_dates,
+    )
     from aetherium_trader_datapipeline_spark.plans.control_table import (
         ControlTable,
         job_key,
@@ -115,12 +117,49 @@ def test_backfill_refuses_stream_sink_lake(spark, tmp_path):
 
     control = ControlTable(str(tmp_path / "ctl"))
     report = backfill_range(
-        spark, control, historical_ticks, data, "NQ", "2025-12-01", "2025-12-01"
+        spark, control, historical_ticks, data, "NQ", "2025-12-01", "2025-12-03"
     )
-    st = control.get(job_key("NQ", "2025-12-01"))
-    assert (st.status, st.last_error_type) == ("FAILED", "ValueError")
-    assert report.failed_days == ["2025-12-01"]
-    assert read_lake(spark, data).count() == 720
+    assert report.failed_days == []
+    assert control.get(job_key("NQ", "2025-12-01")).status == "COMPLETED"
+    lake = read_lake(spark, data)
+    assert lake.count() == lake.distinct().count() == 3 * 1440
+    assert sorted(str(r.d) for r in existing_dates(spark, data, "NQ").collect()) == [
+        "2025-12-01", "2025-12-02", "2025-12-03"
+    ]
+    assert not os.path.exists(os.path.join(data, "_spark_metadata"))
+
+
+def test_ingest_batch_refuses_stream_sink_root(spark, tmp_path):
+    """A lake that Spark's own streaming file sink wrote is read through its
+    ``_spark_metadata`` log, so a batch write there would be invisible and
+    would delete files the log lists. ``ingest_batch`` refuses it before
+    any Spark work and leaves it readable."""
+    import glob
+
+    from aetherium_trader_datapipeline_spark.sources.ticks import historical_ticks
+    from aetherium_trader_datapipeline_spark.streaming.ingest import (
+        ingest_batch,
+        with_partition_cols,
+    )
+
+    src, data, ckpt = (str(tmp_path / d) for d in ("src", "data", "ckpt"))
+    day = historical_ticks(spark, "NQ", "2025-12-01")
+    day.where("hour(timestamp) < 12").coalesce(1).write.parquet(src)
+    q = (
+        with_partition_cols(spark.readStream.schema(day.schema).parquet(src))
+        .writeStream.format("parquet")
+        .option("path", data)
+        .option("checkpointLocation", ckpt)
+        .partitionBy("symbol", "date", "hour")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    files = sorted(glob.glob(os.path.join(data, "symbol=*", "date=*", "hour=*", "*.parquet")))
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        ingest_batch(day, data)
+    assert sorted(glob.glob(os.path.join(data, "symbol=*", "date=*", "hour=*", "*.parquet"))) == files
+    assert spark.read.parquet(data).count() == 720
 
 
 @pytest.mark.parametrize("layout", ["missing", "empty"])

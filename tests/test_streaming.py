@@ -544,6 +544,184 @@ def test_ingest_restart_exactly_once(spark, tick_day, tmp_path):
     assert spark.read.parquet(out).count() == n1 + n2
 
 
+def test_ingest_replay_replaces_its_own_files(spark, tick_day, tmp_path):
+    """A batch replayed after a crash between its lake commit and its
+    checkpoint commit entry replaces exactly its own files, even when the
+    replay splits its rows over more tasks. Staged orphans and hidden
+    files are invisible to every reader of the lake."""
+    import glob
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from aetherium_trader_datapipeline_spark.plans.backfill_service import existing_dates
+    from aetherium_trader_datapipeline_spark.streaming.ingest import ingest_stream, read_lake
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    os.makedirs(src)
+    # a tick a minute: one row group per hour, so a small split size
+    # spreads a file's hours over several tasks
+    ticks = tick_day.orderBy("timestamp").toArrow()
+    halves = [f"{src}/part-{i}.parquet" for i in range(2)]
+    pq.write_table(ticks.slice(0, 720), halves[0], row_group_size=60)
+    pq.write_table(ticks.slice(720), halves[1], row_group_size=60)
+
+    def drain():
+        stream = (
+            spark.readStream.schema(tick_day.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = ingest_stream(stream, out, ckpt, available_now=True)
+        q.awaitTermination(120)
+        return q
+
+    def lake_files():
+        return sorted(glob.glob(f"{out}/**/*.parquet", recursive=True))
+
+    q = drain()
+    before, n = lake_files(), read_lake(spark, out).count()
+    assert (n, len(before)) == (1440, 24)
+
+    # the crash: batch 1 committed its files, not its checkpoint entry
+    last = max(int(c) for c in os.listdir(f"{ckpt}/commits") if c.isdigit())
+    for c in (str(last), f".{last}.crc"):
+        if os.path.exists(f"{ckpt}/commits/{c}"):
+            os.remove(f"{ckpt}/commits/{c}")
+    # and an earlier attempt of that batch left one more file
+    batch_file = next(f for f in before if f"-{q.id}-{last}-" in f)
+    stale = batch_file.replace("-00000.parquet", "-00007.parquet")
+    shutil.copy(batch_file, stale)
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "4096")
+    try:
+        split = spark.read.parquet(halves[1]).groupBy(F.spark_partition_id()).count()
+        assert split.count() > 1  # the replay's rows span several tasks
+        q2 = drain()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert q2.id == q.id
+    assert [p["batchId"] for p in q2.recentProgress if p["numInputRows"]] == [last]
+    assert lake_files() == before
+    assert read_lake(spark, out).count() == n
+
+    orphan = f"{out}/_staging/0123abcd/symbol=NQ/date=2024-01-09/hour=0/x.parquet"
+    hidden = f"{out}/symbol=NQ/date=2024-01-08/hour=0/.x.tmp"
+    for p in (orphan, hidden):
+        os.makedirs(os.path.dirname(p))
+        shutil.copy(before[0], p)
+    assert read_lake(spark, out).count() == n
+    assert [str(r.d) for r in existing_dates(spark, out, "NQ").collect()] == ["2024-01-02"]
+    assert sorted(glob.glob(os.path.join(out, "symbol=*", "date=*", "hour=*", "*.parquet"))) == before
+
+
+def test_ingest_unresolvable_root_fails_before_spark_work(spark, tick_day, tmp_path):
+    """A lake root pyarrow cannot resolve raises ``ValueError`` before any
+    Spark job runs or any query starts, for either sink and for the
+    quarantine root too."""
+    from aetherium_trader_datapipeline_spark.streaming.ingest import ingest_batch, ingest_stream
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job, active = dag.nextJobId(), len(spark.streams.active)
+    with pytest.raises(ValueError, match="cannot resolve lake root"):
+        ingest_batch(tick_day, "nosuchscheme://bucket/lake")
+    stream = spark.readStream.schema(tick_day.schema).parquet(str(tmp_path))
+    with pytest.raises(ValueError, match="cannot resolve lake root"):
+        ingest_stream(stream, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+                      available_now=True, quarantine_dir="nosuchscheme://bucket/q")
+    assert (dag.nextJobId(), len(spark.streams.active)) == (first_job, active)
+
+
+def test_staged_files_take_one_complete_attempt_per_task(tmp_path):
+    """The commit moves the files of one marked attempt per task: files a
+    failed attempt left without its marker stay out of the lake."""
+    import pyarrow.fs as pafs
+
+    from aetherium_trader_datapipeline_spark.streaming.ingest import _staged_files
+
+    staging, name = str(tmp_path), "part-q-7"
+    staged = {
+        "symbol=NQ/date=2024-01-02/hour=0/part-q-7-0-0.parquet",  # attempt 0 failed
+        "symbol=NQ/date=2024-01-02/hour=0/part-q-7-0-1.parquet",
+        "symbol=NQ/date=2024-01-02/hour=1/part-q-7-0-1.parquet",
+        "symbol=NQ/date=2024-01-02/hour=1/part-q-7-1-0.parquet",
+        "_done-0-1",
+        "_done-1-0",
+    }
+    for f in staged:
+        os.makedirs(os.path.dirname(tmp_path / f), exist_ok=True)
+        (tmp_path / f).touch()
+    got = sorted((d, task, os.path.basename(p))
+                 for d, task, p in _staged_files(pafs.LocalFileSystem(), staging, name))
+    assert got == [
+        ("symbol=NQ/date=2024-01-02/hour=0", 0, "part-q-7-0-1.parquet"),
+        ("symbol=NQ/date=2024-01-02/hour=1", 0, "part-q-7-0-1.parquet"),
+        ("symbol=NQ/date=2024-01-02/hour=1", 1, "part-q-7-1-0.parquet"),
+    ]
+
+
+def test_lake_reads_spark_written_files(spark, tick_day, tmp_path):
+    """A lake that already holds files Spark's writer made (INT96
+    timestamps, INT64 decimals) reads together with the Arrow writer's
+    (INT64 TIMESTAMP(MICROS), DECIMAL(10,4)) through ``read_lake``."""
+    import datetime as dt
+
+    from aetherium_trader_datapipeline_spark.sources.ticks import historical_ticks
+    from aetherium_trader_datapipeline_spark.streaming.ingest import (
+        ingest_batch,
+        read_lake,
+        with_partition_cols,
+    )
+
+    lake = str(tmp_path / "lake")
+    with_partition_cols(tick_day).write.partitionBy("symbol", "date", "hour").parquet(lake)
+    next_day = historical_ticks(spark, "NQ", "2024-01-03", today=dt.date(2024, 6, 1))
+    ingest_batch(next_day, lake)
+    got = read_lake(spark, lake).drop("date", "hour")
+    want = tick_day.unionByName(next_day)
+    assert got.count() == 2 * 1440
+    assert got.exceptAll(want.select(got.columns)).count() == 0
+
+
+def test_partition_path_matches_spark(spark, tmp_path):
+    """The writer names partition directories exactly as Spark does
+    (``ExternalCatalogUtils.getPartitionPathString``), and Spark's
+    partition discovery reads the values back."""
+    from aetherium_trader_datapipeline_spark.streaming.ingest import ingest_batch, partition_path
+
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    values = [None, "", "NQ", "a/b", "x=y", "50%", "a:b", "é", *map(chr, range(1, 128))]
+    for v in values:
+        assert partition_path("symbol", v) == utils.getPartitionPathString("symbol", v), repr(v)
+
+    # rows of six symbols over five hours, interleaved: every row must land
+    # in the partition its own symbol and timestamp name
+    symbols = ["a/b", "x=y", "50%", "a:b", "é", "{q}"]
+    rows = [
+        (f"2024-01-02 {10 + (i * 7) % 5:02d}:{i % 60:02d}:00", symbols[i % 6], 100.0, 1,
+         100.25, 1, 100.0, 1)
+        for i in range(90)
+    ]
+    ticks = spark.createDataFrame(
+        rows,
+        "timestamp STRING, symbol STRING, bid_price DOUBLE, bid_size INT, "
+        "ask_price DOUBLE, ask_size INT, last_price DOUBLE, last_size INT",
+    ).withColumn("timestamp", F.col("timestamp").cast("timestamp"))
+    ingest_batch(ticks.coalesce(1), str(tmp_path / "lake"))
+    back = spark.read.parquet(str(tmp_path / "lake"))
+    assert sorted((str(r.timestamp), r.symbol) for r in back.collect()) == sorted(
+        (str(r.timestamp), r.symbol) for r in ticks.collect()
+    )
+    misplaced = back.where((F.col("hour") != F.hour("timestamp"))
+                           | (F.col("date") != F.to_date("timestamp")))
+    assert misplaced.count() == 0
+
+
 def test_stateful_anomaly_stream_equals_batch(spark, tmp_path):
     """applyInPandasWithState anomaly flags over multiple micro-batches
     must equal the batch kernel over the full history (trailing-value
