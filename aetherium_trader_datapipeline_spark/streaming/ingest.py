@@ -25,10 +25,11 @@ by epoch as in Structured Streaming's idempotent sinks):
    into the lake, with local file operations through one ``pyarrow.fs``
    filesystem (no Spark job, no py4j call per file). A failed job commits
    nothing, and files an attempt left without its marker are never moved.
-3. A stream batch's write id is ``<queryId>-<batchId>``. In every key
-   directory it touches, the commit first deletes the
-   ``part-<queryId>-<batchId>-*`` files of an earlier attempt of that
-   batch, then moves its files in as ``part-<queryId>-<batchId>-<n>``,
+3. A stream batch's write id is ``<queryId>-<batchId>``. Its replay
+   first clears whatever an earlier attempt left staged under that id
+   (the driver may have died before removing it). In every key directory
+   it touches, the commit first deletes the ``part-<queryId>-<batchId>-*``
+   files of an earlier attempt of that batch, then moves its files in as ``part-<queryId>-<batchId>-<n>``,
    ``n`` numbering them in task order. A replayed batch therefore replaces
    exactly its own files, however its rows were split into tasks, and two
    queries writing one lake never collide. The checkpoint persists the
@@ -206,6 +207,9 @@ def _write_lake(frame: DataFrame, fs: pafs.FileSystem, root: str, write_id: str,
     first; otherwise only files of an earlier attempt of ``write_id`` go."""
     staging = f"{root}/{STAGING_DIR}/{write_id}"
     name = f"part-{write_id}"
+    # only a replay of a stream batch reuses a write id: what an earlier
+    # attempt staged before its driver died must not pass for this one's
+    fs.delete_dir_contents(staging, missing_dir_ok=True)
     try:
         # the tasks' output is their staged files; the action returns nothing
         (frame.mapInArrow(partial(_stage_files, fs=fs, staging=staging, name=name), frame.schema)

@@ -547,8 +547,10 @@ def test_ingest_restart_exactly_once(spark, tick_day, tmp_path):
 def test_ingest_replay_replaces_its_own_files(spark, tick_day, tmp_path):
     """A batch replayed after a crash between its lake commit and its
     checkpoint commit entry replaces exactly its own files, even when the
-    replay splits its rows over more tasks. Staged orphans and hidden
-    files are invisible to every reader of the lake."""
+    replay splits its rows over more tasks. What an attempt that died
+    before its commit left staged under the batch's write id is not
+    committed by the replay. Staged orphans and hidden files are
+    invisible to every reader of the lake."""
     import glob
     import shutil
 
@@ -592,6 +594,14 @@ def test_ingest_replay_replaces_its_own_files(spark, tick_day, tmp_path):
     batch_file = next(f for f in before if f"-{q.id}-{last}-" in f)
     stale = batch_file.replace("-00000.parquet", "-00007.parquet")
     shutil.copy(batch_file, stale)
+    # and another died after staging, before its commit: its task 0 wrote
+    # an hour (of batch 0) that no task of the replay writes
+    staged = f"{out}/_staging/{q.id}-{last}"
+    hour0 = next(f for f in before if "/hour=0/" in f)
+    planted = f"{staged}/{os.path.relpath(os.path.dirname(hour0), out)}/part-{q.id}-{last}-0-0.parquet"
+    os.makedirs(os.path.dirname(planted))
+    shutil.copy(hour0, planted)
+    open(f"{staged}/_done-0-0", "w").close()
 
     key = "spark.sql.files.maxPartitionBytes"
     prev = spark.conf.get(key, None)
@@ -609,6 +619,7 @@ def test_ingest_replay_replaces_its_own_files(spark, tick_day, tmp_path):
     assert [p["batchId"] for p in q2.recentProgress if p["numInputRows"]] == [last]
     assert lake_files() == before
     assert read_lake(spark, out).count() == n
+    assert not os.path.exists(staged)
 
     orphan = f"{out}/_staging/0123abcd/symbol=NQ/date=2024-01-09/hour=0/x.parquet"
     hidden = f"{out}/symbol=NQ/date=2024-01-08/hour=0/.x.tmp"
