@@ -284,7 +284,14 @@ def _partition_sizes(
     recursive filesystem LISTING of the table's partition directories —
     no data scan, and correct for every scheme (s3a/hdfs/local) and for
     escaped values, where the previous input_file_name +
-    os.path.getsize approach silently returned 0 (r10 review finding)."""
+    os.path.getsize approach silently returned 0 (r10 review finding).
+
+    Raises ``ValueError`` unless ``partition_col`` is the table's only
+    partition level: a root directory keyed by another column, or a
+    ``k=v`` directory nested in a partition (the ingest lake's
+    ``symbol=…/date=…/hour=…``), would make the rewrite below flatten or
+    mix layouts, after which every read fails with
+    CONFLICTING_PARTITION_COLUMN_NAMES."""
     fs, root = _hadoop_fs(spark, table_path)
     u = _catalog_utils(spark)
     default = u.DEFAULT_PARTITION_NAME()
@@ -292,14 +299,30 @@ def _partition_sizes(
     sizes: dict = {}
     for st in fs.listStatus(root):
         name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith(prefix)):
+        if name.startswith(("_", ".")) or not st.isDirectory():
             continue
+        if not name.startswith(prefix):
+            raise ValueError(
+                f"{table_path} holds {name!r}, not a '{partition_col}=' "
+                f"partition: compaction rewrites a table partitioned by "
+                f"'{partition_col}' alone"
+            )
         raw = name[len(prefix):]
         value = None if raw == default else u.unescapePathName(raw)
         total = n = 0
+        base = st.getPath().toString()
         it = fs.listFiles(st.getPath(), True)
         while it.hasNext():
             f = it.next()
+            path = f.getPath().toString()
+            nested = next((d for d in path[len(base) + 1:].split("/")[:-1]
+                           if "=" in d and not d.startswith(("_", "."))), None)
+            if nested:
+                raise ValueError(
+                    f"{table_path}/{name} nests partition directory "
+                    f"{nested!r}: compaction rewrites a table partitioned "
+                    f"by '{partition_col}' alone"
+                )
             if not f.getPath().getName().startswith(("_", ".")):
                 total += f.getLen()
                 n += 1
@@ -339,6 +362,10 @@ def compact_partitions(
     Compaction's contract here is "bounded file count, preserved sort",
     not exact file sizes; a caller needing tighter sizing should weight
     the budget per partition by estimated bytes/row from the listing.
+
+    Raises ``ValueError`` before any Spark job unless ``partition_col`` is
+    the table's only partition level (``_partition_sizes``): the ingest
+    lake's ``symbol/date/hour`` layout is refused, not compacted.
     """
     reject_stream_sink_root(spark, table_path)
     sizes = _partition_sizes(spark, table_path, partition_col)

@@ -34,21 +34,21 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # seconds per test FILE, measured from the r11 full-suite run
 # (junitxml sums); test_plan_audit.py re-measured with --durations=0 on
-# 4 cores after its four registry passes became one; test_metrics.py,
-# test_streaming.py and test_e2e_platform.py measured the same way (call
-# time, session setup excluded). Refresh
+# 4 cores after its four registry passes became one; test_metrics.py
+# measured the same way (call time, session setup excluded);
+# test_streaming.py, test_e2e_platform.py and test_merge_compact.py from
+# the junitxml sums of a serial full-suite run on 4 cores. Refresh
 # occasionally; missing files are estimated.
 _DURATIONS: dict[str, float] = {}  # populated below by _load_measured()
 
 _MEASURED = """
 test_queries_oracle.py 372
-test_streaming.py 230
 test_plan_audit.py 136
+test_streaming.py 122
 test_properties.py 79
 test_operators.py 79
 test_sessionizer_tws.py 68
-test_merge_compact.py 44
-test_e2e_platform.py 32
+test_merge_compact.py 45
 test_microprice_tws.py 30
 test_asof_tws.py 29
 test_control_table.py 23
@@ -62,6 +62,7 @@ test_heavy_hitters.py 11
 test_dedup_tws.py 11
 test_plans.py 10
 test_layout.py 10
+test_e2e_platform.py 9
 test_bootstrap.py 9
 test_rollup_sketches.py 9
 test_properties_sql.py 8

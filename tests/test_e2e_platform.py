@@ -27,14 +27,19 @@ def test_ingest_outage_gap_backfill_verify(spark):
         job_key,
     )
     from aetherium_trader_datapipeline_spark.sources.ticks import historical_ticks
-    from aetherium_trader_datapipeline_spark.streaming.ingest import ingest_batch
+    from aetherium_trader_datapipeline_spark.streaming.ingest import ingest_stream
 
     base = tempfile.mkdtemp(prefix="e2e-")
-    data, ctl = f"{base}/data", f"{base}/ctl"
+    src, data, ckpt, ctl = (f"{base}/{d}" for d in ("src", "data", "ckpt", "ctl"))
 
-    # 1. normal ingestion lands three days
-    for day in ("2025-12-01", "2025-12-02", "2025-12-03"):
-        ingest_batch(historical_ticks(spark, "NQ", day), data)
+    # 1. live ingestion streams three days into the lake
+    days = [historical_ticks(spark, "NQ", d) for d in ("2025-12-01", "2025-12-02", "2025-12-03")]
+    for day in days:
+        day.coalesce(1).write.mode("append").parquet(src)
+    q = ingest_stream(
+        spark.readStream.schema(days[0].schema).parquet(src), data, ckpt, available_now=True
+    )
+    q.awaitTermination(120)
     assert inspect_parquet(spark, data)["num_rows"] == 3 * 1440
 
     # 2. outage: day 2 vanishes from the store

@@ -129,6 +129,37 @@ def test_compact_partitions_refuses_stream_sink_root(spark, tmp_path):
     assert spark.read.parquet(base).count() == 200
 
 
+def test_compact_partitions_refuses_ingest_lake(spark, tmp_path):
+    """The ingest lake is partitioned ``symbol/date/hour``. Compacting it
+    by ``date`` (not its root level) or by ``symbol`` (whose directories
+    nest more partitions) would leave a layout every read rejects with
+    CONFLICTING_PARTITION_COLUMN_NAMES. Both raise before any Spark job,
+    and the lake stays as it was."""
+    import datetime as dt
+
+    from aetherium_trader_datapipeline_spark.sources.ticks import historical_ticks
+    from aetherium_trader_datapipeline_spark.streaming.ingest import ingest_batch, read_lake
+
+    lake = str(tmp_path / "lake")
+    for day in ("2024-01-02", "2024-01-03"):
+        ingest_batch(historical_ticks(spark, "NQ", day, today=dt.date(2024, 6, 1)), lake)
+
+    def listing():
+        return sorted(os.path.relpath(os.path.join(d, f), lake)
+                      for d, _dirs, files in os.walk(lake) for f in files)
+
+    files = listing()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job = dag.nextJobId()
+    with pytest.raises(ValueError, match="holds 'symbol=NQ', not a 'date=' partition"):
+        compact_partitions(spark, lake, partition_col="date")
+    with pytest.raises(ValueError, match="nests partition directory 'date="):
+        compact_partitions(spark, lake, partition_col="symbol")
+    assert dag.nextJobId() == first_job
+    assert listing() == files
+    assert read_lake(spark, lake).count() == 2 * 1440
+
+
 def test_merge_upsert_idempotent_reapply(spark):
     """Re-applying the same CDC batch is a no-op — the engine-side
     equivalent of the reference's idempotent re-run guarantee

@@ -676,6 +676,117 @@ def test_staged_files_take_one_complete_attempt_per_task(tmp_path):
     ]
 
 
+def _count_directory_reads(fn):
+    """``(result of fn(), zip directories read while it ran)``: wraps
+    ``zipimport._read_directory``, which every cached ``zipimporter``
+    calls for its archive on ``importlib.invalidate_caches()`` before
+    CPython 3.13."""
+    import zipimport
+
+    read, reads = zipimport._read_directory, []
+
+    def counting(archive):
+        reads.append(archive)
+        return read(archive)
+
+    zipimport._read_directory = counting
+    try:
+        return fn(), len(reads)
+    finally:
+        zipimport._read_directory = read
+
+
+def test_lake_writer_task_drops_zip_importers(spark):
+    """A lake-writer task leaves its Python worker with no cached
+    ``zipimporter``, so the invalidation pyspark runs before the worker's
+    next task re-reads no archive; an import of a pyspark module not yet
+    loaded still resolves, without a re-read either. Skipped only when no
+    zip archive is on the worker's path."""
+    import importlib
+    import pkgutil
+    import sys
+    import zipimport
+
+    import pyarrow as pa
+    import pyarrow.fs as pafs
+    from pyspark import cloudpickle
+
+    from aetherium_trader_datapipeline_spark.streaming.ingest import _stage_files
+
+    candidates = ["pyspark.statcounter", "pyspark.traceback_utils", "pyspark.find_spark_home",
+                  "pyspark.sql.avro.functions", "pyspark.ml.param.shared"]
+
+    def probe(batches):
+        list(batches)
+        # cache an importer per archive on the path, as a fresh worker's
+        # imports do: an earlier lake-writer task may have run in this one
+        for path in sys.path:
+            if os.path.isfile(path):
+                pkgutil.get_importer(path)
+        held = sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
+        # no rows to stage: the task body only drops the importers
+        list(_stage_files(iter([]), pafs.LocalFileSystem(), "unused", "unused"))
+        _, invalidate_reads = _count_directory_reads(importlib.invalidate_caches)
+        name = next((m for m in candidates if m not in sys.modules), None)
+        module, import_reads = _count_directory_reads(lambda: name and importlib.import_module(name))
+        yield pa.RecordBatch.from_pydict({
+            "held": [held], "invalidate_reads": [invalidate_reads], "name": [name],
+            "resolved": [module is not None and module.__name__ == name],
+            "import_reads": [import_reads],
+        })
+
+    # the probe calls this module's counter, which workers cannot import
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    try:
+        [got] = spark.range(1, numPartitions=1).mapInArrow(
+            probe, "held LONG, invalidate_reads LONG, name STRING, resolved BOOLEAN, import_reads LONG"
+        ).collect()
+    finally:
+        cloudpickle.unregister_pickle_by_value(sys.modules[__name__])
+    if not got.held:
+        pytest.skip("no zip archive is on the Python worker's path")
+    assert got.invalidate_reads == 0
+    assert got.name is not None, "every candidate module is already loaded"
+    assert got.resolved, got.name
+    assert got.import_reads == 0
+
+
+def test_drop_zip_importers_keeps_zip_imports(tmp_path):
+    """After ``_drop_zip_importers``, ``importlib.invalidate_caches()``
+    reads no zip directory, and a submodule of a package imported from a
+    zip archive still imports."""
+    import importlib
+    import sys
+    import zipfile
+
+    from aetherium_trader_datapipeline_spark.streaming.ingest import _drop_zip_importers
+
+    archive = str(tmp_path / "zipdrop.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipdrop_pkg/__init__.py", "")
+        z.writestr("zipdrop_pkg/sub.py", "VALUE = 7\n")
+    path = list(sys.path)
+    sys.path.insert(0, archive)
+    try:
+        importlib.import_module("zipdrop_pkg")
+        _, reads_before = _count_directory_reads(importlib.invalidate_caches)
+        # 3.13 made zipimporter invalidation lazy: nothing to re-read there
+        assert reads_before >= 1 or sys.version_info >= (3, 13)
+        _drop_zip_importers()
+        _, reads = _count_directory_reads(importlib.invalidate_caches)
+        assert reads == 0
+        sub, import_reads = _count_directory_reads(
+            lambda: importlib.import_module("zipdrop_pkg.sub"))
+        assert sub.VALUE == 7
+        assert import_reads == 0
+    finally:
+        sys.path[:] = path
+        for name in ("zipdrop_pkg.sub", "zipdrop_pkg"):
+            sys.modules.pop(name, None)
+        for key in [k for k in sys.path_importer_cache if k.startswith(archive)]:
+            del sys.path_importer_cache[key]
+
+
 def test_lake_reads_spark_written_files(spark, tick_day, tmp_path):
     """A lake that already holds files Spark's writer made (INT96
     timestamps, INT64 decimals) reads together with the Arrow writer's
